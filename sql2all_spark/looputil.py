@@ -1,6 +1,6 @@
 """Scale-adaptive shuffle width for driver-loop operators.
 
-The iterative operators (star contraction, label propagation, EM/prune
+The iterative operators (star contraction, BPE merge rounds, EM/prune
 and codebook training loops) run many small Spark jobs over slim,
 bounded frames.  Each round's shuffles start at the session-wide
 ``spark.sql.shuffle.partitions`` (2×cores by default) and rely on AQE to
@@ -24,10 +24,13 @@ session value afterwards:
 - The result is CAPPED at the session value: on a cluster where the
   input is genuinely large, the loop keeps the session's width and this
   is a no-op.  It only ever narrows small loops, never widens big ones.
-- AQE stays on — it still coalesces below the initial width and splits
-  skew.
+- AQE is switched OFF for the loop when the input has at most
+  ``LOOP_AQE_OFF_ROWS`` rows (one partition's worth): there is nothing
+  to coalesce and no skew to split, and AQE would turn each round into
+  several re-planning jobs.  Above that AQE stays on, coalescing below
+  the initial width and splitting skew.
 
-The conf is session-global while set; every shipped runner (driver
+Both confs are session-global while set; every shipped runner (driver
 gate, check.py, bench.py) builds and executes queries one at a time on
 one thread, and the restore is in ``finally``.  Streaming jobs never
 run inside these loops.

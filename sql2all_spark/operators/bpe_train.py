@@ -22,10 +22,10 @@ Execution shape (the ``graph.py`` iterative pattern):
   are restricted to sym_a <> sym_b, so greedy left-to-right matches
   can never overlap and the pass needs no sequential scan — the same
   argument as tokenize._bpe_pass_sql);
-- lineage truncates per round (``_truncate_lineage``: reliable
-  checkpoint when a checkpoint dir is configured, localCheckpoint in
-  local mode) — round N's plan references round N-1 once for the pass
-  and once for mining, so an untruncated loop grows multiplicatively.
+- the loop state IS the per-round checkpoint (``cache.checkpoint_tracked``
+  picks reliable or local storage) — round N's plan references round N-1 once for the pass and
+  once for mining, so an untruncated loop grows multiplicatively, and a
+  cache on top of the checkpoint would only store a second copy.
 
 The oracle replays the IDENTICAL loop as mechanically-unrolled SQL (one
 mine-CTE + one apply-CTE per round), so the driver's value gate proves
@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql2all_spark.cache import persist_tracked, release_tracked
+from sql2all_spark.cache import checkpoint_tracked
 from sql2all_spark.registry import register
 from sql2all_spark.tables import load_table
 
@@ -135,9 +135,7 @@ def train_bpe(
     Rules are (rank, sym_a, sym_b, merged, pair_count) tuples; the final
     vocab is the (c, syms) frame after all merges — exposed so tests can
     pin encoder consistency."""
-    from sql2all_spark.operators.graph import _truncate_lineage
-
-    cur = _initial_vocab(spark, sf_dir).transform(persist_tracked)
+    cur = checkpoint_tracked(_initial_vocab(spark, sf_dir))
     rules: list[tuple] = []
     # Loop shuffles sized from the materialized vocab count, AQE off for
     # tiny frames (looputil) — each mining round is one pair-explode +
@@ -154,13 +152,11 @@ def train_bpe(
                 (rank, r["sym_a"], r["sym_b"], r["sym_a"] + r["sym_b"],
                  r["pair_count"])
             )
-            nxt = _truncate_lineage(
+            cur = checkpoint_tracked(
                 cur.select(
                     "c", _apply_merge(F.col("syms"), r["sym_a"], r["sym_b"]).alias("syms")
                 )
             )
-            release_tracked()
-            cur = nxt.transform(persist_tracked)
     return rules, cur
 
 
@@ -227,7 +223,6 @@ ORDER BY rank ASC NULLS FIRST
 )
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules, _final_vocab = train_bpe(spark, sf_dir)
-    release_tracked()
     return spark.createDataFrame(
         rules, "rank long, sym_a string, sym_b string, merged string,"
         " pair_count long"

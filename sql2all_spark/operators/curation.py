@@ -356,10 +356,10 @@ ORDER BY cluster_id ASC NULLS FIRST
     " lowest doc_id) every production dedup applies after clustering,"
     " reported as one governance row per cluster with the token count"
     " the drop saves.  Scale shape: cluster labels come from the"
-    " iterative min-label propagation (O(edge-nodes) per round, lineage"
-    " truncated); the keeper argmax is a partial-aggregatable struct"
-    " MAX((n_tokens, -doc_id)) — no per-cluster window, no second"
-    " shuffle beyond the one groupBy(cluster_id).  The oracle replays"
+    " alternating large-star/small-star loop (O(log d) rounds over the"
+    " edge list, lineage truncated); the keeper argmax is a partial-"
+    "aggregatable struct MAX((n_tokens, -doc_id)) — no per-cluster"
+    " window, no second shuffle beyond the one groupBy(cluster_id).  The oracle replays"
     " the same policy over a recursive-CTE closure seeded only from"
     " edge-incident nodes.",
 )
@@ -368,9 +368,8 @@ def dedup_keeper_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # queries on first import — importing them at THIS module's load time
     # would pull both into the front of the driver window and shift every
     # registration position (registry._QUERY_MODULES ordering contract).
-    # The star variant yields IDENTICAL labels (same oracle/fixpoint as
-    # dedup_clusters) in O(log d) propagation rounds instead of
-    # O(diameter) — the right default when feeding a downstream consumer.
+    # dedup_clusters_star is the same builder as dedup_clusters (star
+    # contraction, O(log d) rounds).
     from sql2all_spark.operators.graph import dedup_clusters_star
 
     labels = (

@@ -52,5 +52,5 @@ WHERE CAST(i AS DOUBLE) / (na + nb - i) >= {JACCARD_FLOOR}
 # links barely-overlapping docs into one giant dense component (~200k edges
 # at sf0.1 — a hairball, not duplicate groups); 0.4 keeps only genuine
 # near-duplicate edges, so components are the actual dup clusters and the
-# propagation loop converges in a few cheap rounds.
+# clustering loop converges in a few cheap rounds.
 CLUSTER_JACCARD_FLOOR = 0.4

@@ -2,17 +2,18 @@
 graph — the step that turns pairwise similarity into actionable dedup
 decisions (one keeper per cluster, drop the rest).
 
-Algorithm: iterative min-label propagation (Pregel-style in DataFrames).
-Every doc starts as its own component; each round, every node adopts the
-minimum component id among itself and its neighbors; converged when no
-label changes.  Rounds needed = graph diameter of the largest cluster —
-near-dup clusters are shallow (dups of a common source), so this converges
-in a handful of rounds even at corpus scale.  Each round is one join + one
-groupBy on the edge list; labels persist between rounds and the previous
-round's cache is released.
+Algorithm: alternating large-star/small-star contraction
+(:func:`star_components`, Kiveris et al.) over the edge list.  Every round
+rewires edges toward smaller node ids; at the fixpoint the edge set is a
+star forest whose centers are the component minima.  Rounds needed =
+O(log d) for component diameter d, so deep chains (drifted successive
+revisions) stay cheap.  Each round is three exchanges on the slim edge
+list, its lineage truncated through ``cache.checkpoint_tracked``.
 
 This is the driver-side-loop iterative pattern (like sim_kmeans_iteration)
-— no collect() of data, only a scalar convergence count per round.
+— no collect() of data, only a scalar convergence signature every other
+round.  Both registered names (``dedup_clusters`` and
+``dedup_clusters_star``) run the same builder against the same oracle.
 
 Oracle: DuckDB recursive CTE computes the transitive closure and takes the
 min reachable id per node — exact same fixpoint, declaratively.
@@ -24,58 +25,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sql2all_spark.cache import checkpoint_tracked, persist_tracked
 from sql2all_spark.operators.dedup import dedup_ngram_jaccard
 from sql2all_spark.operators.dedup_shared import (
     CLUSTER_JACCARD_FLOOR,
     NGRAM_PAIRS_ORACLE,
 )
-from sql2all_spark.cache import persist_tracked
 from sql2all_spark.registry import register
 from sql2all_spark.tables import load_table
 
-MAX_ROUNDS = 25  # safety bound ≫ any real near-dup cluster diameter
-
-
-def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Checkpoint an iterative intermediate, picking the storage that fits
-    the deployment.
-
-    ``eager=False`` (local mode only): truncate the Catalyst lineage NOW
-    but let the caller's next action materialize the blocks — a loop
-    that immediately runs a convergence aggregate over the result then
-    pays ONE job per round instead of two (localCheckpoint persists
-    blocks as the RDD computes, so nothing is recomputed).  Reliable
-    checkpoints ignore the flag: a non-eager reliable checkpoint
-    re-runs the whole lineage a second time to write the files.
-
-    Iterative plans grow multiplicatively in lineage (round N references
-    round N-1 twice), which blows up Catalyst planning long before
-    execution — every loop here truncates per round.  But localCheckpoint
-    blocks live on EXECUTORS: on a real cluster with dynamic allocation, a
-    decommissioned executor permanently loses them and the job dies
-    mid-loop.  So: if the session has a reliable checkpoint dir configured
-    (``spark.sparkContext.setCheckpointDir`` to a shared filesystem), use
-    a real checkpoint; otherwise (local mode, tests) localCheckpoint is
-    both safe and faster.
-
-    Deployment note: Spark does NOT clean reliable checkpoint files by
-    default, so repeated invocations accumulate ``rdd-*`` dirs on the
-    shared filesystem.  Cluster deployments that route through this path
-    should set ``spark.cleaner.referenceTracking.cleanCheckpoints=true``
-    (cleans when the RDD is GC'd) or prune the checkpoint dir between
-    jobs."""
-    sc = df.sparkSession.sparkContext
-    try:
-        has_dir = sc.getCheckpointDir() is not None
-    except Exception:
-        has_dir = False
-    if has_dir:
-        return df.checkpoint()
-    return df.localCheckpoint(eager=eager)
-
-# CLUSTER_JACCARD_FLOOR (0.4, vs the 0.05 pair-mining floor) now lives in
-# dedup_shared.py with its rationale; imported above.
-
+MAX_ROUNDS = 25  # safety bound ≫ log2 of any real near-dup cluster diameter
 
 CLUSTERS_ORACLE = f"""
 WITH RECURSIVE
@@ -101,109 +60,6 @@ SELECT doc_id, cluster_id,
        COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
 FROM comp
 """
-
-
-@register(
-    "dedup_clusters",
-    oracle=CLUSTERS_ORACLE,
-    doc="Connected components over the n-gram-Jaccard near-dup graph via"
-    " iterative min-label propagation; every document gets a cluster_id"
-    " (= min doc_id in its component), a keeper flag, and the cluster"
-    " size.  Singletons are their own keeper.  The oracle computes the"
-    " same fixpoint with a recursive-CTE transitive closure.",
-)
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = (
-        dedup_ngram_jaccard(spark, sf_dir)
-        .filter(F.col("jaccard") >= CLUSTER_JACCARD_FLOOR)
-        .select("doc_a", "doc_b")
-    )
-    edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-        )
-        .transform(persist_tracked)
-    )
-    # Only nodes that HAVE an edge participate in propagation: with a high
-    # similarity floor almost every doc is a singleton, so the loop runs
-    # over hundreds of rows, not the corpus.  Singletons rejoin at the end
-    # as their own keeper with cluster_size 1.
-    connected = edges.select(F.col("u").alias("doc_id")).distinct()
-    # truncate lineage each round (see _truncate_lineage: reliable
-    # checkpoint when a dir is configured, localCheckpoint otherwise)
-    labels = _truncate_lineage(
-        connected.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    )
-    prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-
-    # Loop shuffles sized from the materialized edge count (looputil):
-    # the propagation rounds re-shuffle a slim bounded edge/label set.
-    from sql2all_spark.looputil import loop_shuffle_partitions
-
-    def _propagate(lbl: DataFrame) -> DataFrame:
-        # each node's best neighbor label this round
-        nbr = (
-            edges.join(lbl, edges.v == lbl.doc_id)
-            .groupBy("u")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        return lbl.join(nbr, lbl.doc_id == nbr.u, "left").select(
-            "doc_id",
-            F.least(
-                F.col("cluster_id"),
-                F.coalesce("nbr_min", F.col("cluster_id")),
-            ).alias("cluster_id"),
-        )
-
-    with loop_shuffle_partitions(edges):
-        for _ in range(0, MAX_ROUNDS, 2):
-            # TWO propagation rounds per convergence check (r17, the
-            # star_components pattern): each round is truncated
-            # individually (eager=False — the next round builds on a
-            # leaf RDD, no plan composition), but the sum-aggregate runs
-            # every OTHER round; labels are monotone non-increasing, so
-            # an unchanged sum across a double round still ⇔ fixpoint,
-            # at half the driver round trips.  The first round's
-            # checkpoint blocks materialize lazily inside the pair's one
-            # job.
-            new_labels = _truncate_lineage(
-                _propagate(
-                    _truncate_lineage(_propagate(labels), eager=False)
-                ),
-                eager=False,
-            )
-            # labels only ever decrease, so an unchanged sum ⇔ a fixpoint —
-            # one scalar aggregate instead of a join-and-count per round
-            new_sum = new_labels.agg(F.sum("cluster_id")).collect()[0][0]
-            labels = new_labels
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        else:  # pragma: no cover - MAX_ROUNDS ≫ any real diameter
-            raise RuntimeError(
-                f"label propagation did not converge in {MAX_ROUNDS} rounds"
-            )
-
-    from pyspark.sql.window import Window
-
-    # singletons (no edges) are their own keeper; union with the converged
-    # connected-component labels
-    singles = docs.join(connected, "doc_id", "left_anti").select(
-        "doc_id", F.col("doc_id").alias("cluster_id")
-    )
-    all_labels = labels.unionByName(singles)
-    return all_labels.select(
-        "doc_id",
-        "cluster_id",
-        F.when(F.col("doc_id") == F.col("cluster_id"), 1).otherwise(0).alias(
-            "is_keeper"
-        ),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("cluster_id"))
-        .alias("cluster_size"),
-    )
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -259,9 +115,9 @@ def star_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> tuple[Dat
 
     Convergence detection: the edge set only moves "downhill" (every round
     replaces edges with edges to smaller targets), so an unchanged
-    (count, hash-sum) signature ⇔ a fixpoint — two scalar aggregates per
-    round, no data collect (same discipline as dedup_clusters)."""
-    e = _truncate_lineage(edges.select("u", "v"))
+    (count, hash-xor) signature ⇔ a fixpoint — two scalar aggregates
+    every other round, no data collect."""
+    e = checkpoint_tracked(edges.select("u", "v"))
     prev_sig = None
     rounds = 0
     # Loop shuffles sized from the materialized edge count (looputil):
@@ -275,7 +131,7 @@ def star_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> tuple[Dat
             # next round builds on a leaf RDD — plans never compose, so
             # no subtree duplication) but the blocks materialize inside
             # whichever job first executes them.
-            e = _truncate_lineage(
+            e = checkpoint_tracked(
                 _small_star(_large_star(e)), eager=False
             )
             rounds += 1
@@ -320,46 +176,34 @@ def star_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> tuple[Dat
 
 @register(
     "dedup_clusters_star",
-    oracle=f"""
-WITH RECURSIVE
-pairs AS (
-  SELECT * FROM ({NGRAM_PAIRS_ORACLE}) all_pairs
-  WHERE jaccard >= {CLUSTER_JACCARD_FLOOR}
-),
-und AS (
-  SELECT doc_a AS u, doc_b AS v FROM pairs
-  UNION ALL
-  SELECT doc_b AS u, doc_a AS v FROM pairs
-),
-reach(u, r) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT und.u, reach.r FROM und JOIN reach ON und.v = reach.u
-),
-comp AS (
-  SELECT u AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY u
+    oracle=CLUSTERS_ORACLE,
+    doc="The same connected components as dedup_clusters under the name"
+    " that states the algorithm: alternating large-star/small-star"
+    " (Kiveris et al.) — O(log d) rounds, the variant to reach for when dup"
+    " clusters can be long chains (e.g. drifted successive revisions)."
+    "  Same builder, same oracle; a pytest proves the round bound on a"
+    " deliberately deep chain.",
 )
-SELECT doc_id, cluster_id,
-       CASE WHEN doc_id = cluster_id THEN 1 ELSE 0 END AS is_keeper,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
-FROM comp
-""",
-    doc="Connected components over the same near-dup graph as dedup_clusters"
-    " but via alternating large-star/small-star (Kiveris et al.) — O(log d)"
-    " rounds instead of O(d), the variant to reach for when dup clusters can"
-    " be long chains (e.g. drifted successive revisions).  Same oracle, same"
-    " fixpoint; a pytest proves the round bound on a deliberately deep"
-    " chain.",
+@register(
+    "dedup_clusters",
+    oracle=CLUSTERS_ORACLE,
+    doc="Connected components over the n-gram-Jaccard near-dup graph via"
+    " alternating large-star/small-star contraction; every document gets a"
+    " cluster_id (= min doc_id in its component), a keeper flag, and the"
+    " cluster size.  Singletons are their own keeper.  The oracle computes"
+    " the same fixpoint with a recursive-CTE transitive closure.",
 )
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = (
         dedup_ngram_jaccard(spark, sf_dir)
         .filter(F.col("jaccard") >= CLUSTER_JACCARD_FLOOR)
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
+    # Only nodes that HAVE an edge enter the loop: with a high similarity
+    # floor almost every doc is a singleton, so the loop runs over
+    # hundreds of rows, not the corpus.  Singletons rejoin here as their
+    # own keeper with cluster_size 1.
     labels, _ = star_components(pairs)
     singles = docs.join(
         labels.select("doc_id"), "doc_id", "left_anti"
@@ -375,6 +219,9 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.partitionBy("cluster_id"))
         .alias("cluster_size"),
     )
+
+
+dedup_clusters_star = dedup_clusters
 
 
 PR_SCALE = 1_000_000_000  # ranks as scaled integers → exact in both engines
@@ -479,30 +326,10 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the (tiny, PR_TOP-row) result eagerly so the cached edge
     # blocks can be freed NOW: without this, repeated invocations in one
     # session accumulate e/ed blocks in the BlockManager for the life of the
-    # session ("block already exists" warnings on re-run).  local-mode ONLY:
-    # localCheckpoint stores blocks on executors, so on a real cluster with
-    # dynamic allocation an executor decommission silently loses them (and
-    # this eager variant runs a job at plan-construction time).  On a
-    # cluster the plain plan is returned; callers needing re-invocation
-    # hygiene there should use reliable checkpoint() to a shared dir.
-    sc = result.sparkSession.sparkContext
-    try:
-        has_dir = sc.getCheckpointDir() is not None
-    except Exception:
-        has_dir = False
-    if sc.master.startswith("local"):
-        result = result.localCheckpoint(eager=True)
-    elif has_dir:
-        # cluster with a reliable checkpoint dir: same eager hygiene,
-        # executor-loss-safe storage
-        result = result.checkpoint(eager=True)
-    if sc.master.startswith("local") or has_dir:
-        # result is materialized, so the iterative plan no longer needs the
-        # cached edge blocks — free them now.
-        ed.unpersist()
-        e.unpersist()
-    # otherwise leave e/ed persisted — the returned plan still references
-    # them once per iteration, and unpersisting a not-yet-run plan would
-    # force the edge build to recompute every round.  Blocks age out via
-    # the session's LRU / caller-side unpersist.
+    # session ("block already exists" warnings on re-run).  The result no
+    # longer references the iterative plan, so unpersisting cannot force a
+    # recompute.
+    result = checkpoint_tracked(result)
+    ed.unpersist()
+    e.unpersist()
     return result

@@ -236,7 +236,10 @@ def _write_arrow_ipc_dir(df: DataFrame, output: str) -> str:
                 if writer is None:
                     sink = pa.OSFile(path, "wb")
                     writer = ipc.new_file(sink, schema)
-                writer.write_batch(batch)
+                # conform to the driver schema: Spark marks every field
+                # nullable on the driver, but mapInArrow batches can carry
+                # ``not null`` fields the IPC writer would reject
+                writer.write_batch(batch.cast(schema))
                 n_rows += batch.num_rows
             if writer is None and pid == 0:
                 sink = pa.OSFile(path, "wb")

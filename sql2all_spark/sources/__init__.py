@@ -172,7 +172,7 @@ def read_file_sql(
         else:
             with ipc.open_file(path) as r:
                 tbl = r.read_all()
-        df = spark.createDataFrame(tbl.to_pandas())
+        df = spark.createDataFrame(tbl)
         df.createOrReplaceTempView(table)
         return spark.sql(query)
     if fmt == "avro":

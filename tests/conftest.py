@@ -1,11 +1,13 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent  # checkout root
+sys.path.insert(0, str(REPO))
 
 from sql2all_spark.session import get_spark
 from sql2all_spark.tables import TABLE_NAMES
@@ -30,3 +32,8 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def repo_root():
+    return REPO

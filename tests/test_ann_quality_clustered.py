@@ -29,13 +29,12 @@ from tools.ann_quality import exact_and_routing
 
 
 @pytest.fixture(scope="module")
-def clustered_n500(tmp_path_factory):
+def clustered_n500(tmp_path_factory, repo_root):
     out = tmp_path_factory.mktemp("clustered") / "n500"
     subprocess.run(
-        [sys.executable, "tools/gen_clustered.py", "--n", "500",
-         "--out", str(out)],
+        [sys.executable, str(repo_root / "tools" / "gen_clustered.py"),
+         "--n", "500", "--out", str(out)],
         check=True,
-        cwd="/root/repo",
     )
     return str(out)
 
@@ -79,13 +78,12 @@ def test_clustered_ivfpq_recall_recovers(spark, clustered_n500):
         assert len(got & exact10) >= 9, impl.__name__
 
 @pytest.fixture(scope="module")
-def clustered_n5000(tmp_path_factory):
+def clustered_n5000(tmp_path_factory, repo_root):
     out = tmp_path_factory.mktemp("clustered") / "n5000"
     subprocess.run(
-        [sys.executable, "tools/gen_clustered.py", "--n", "5000",
-         "--out", str(out)],
+        [sys.executable, str(repo_root / "tools" / "gen_clustered.py"),
+         "--n", "5000", "--out", str(out)],
         check=True,
-        cwd="/root/repo",
     )
     return str(out)
 

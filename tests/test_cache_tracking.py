@@ -7,10 +7,6 @@ clamp added for ADVICE r7 #4."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from sql2all_spark import cache
 from sql2all_spark.registry import all_specs
 

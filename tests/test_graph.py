@@ -1,13 +1,11 @@
 """Connected-components machinery: the alternating large-star/small-star
-variant must converge logarithmically on deep chains (the pathological case
+loop must converge logarithmically on deep chains (the pathological case
 for min-label propagation, whose round count is the graph diameter)."""
 
 from __future__ import annotations
 
 import math
 import sys
-
-sys.path.insert(0, "/root/repo")
 
 from sql2all_spark.operators.graph import star_components
 
@@ -48,18 +46,6 @@ def test_star_matches_components_on_multi_cluster_graph(spark):
     }
 
 
-def test_star_and_propagation_same_fixpoint(spark, sf_dir):
-    """The registered star query returns exactly the same rows as the
-    propagation-based dedup_clusters on the real near-dup graph."""
-    from sql2all_spark.registry import all_specs
-
-    specs = all_specs()
-    a = specs["dedup_clusters"].builder(spark, sf_dir)
-    b = specs["dedup_clusters_star"].builder(spark, sf_dir)
-    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    assert rows(a) == rows(b)
-
-
 def test_star_handles_duplicate_and_reversed_edges(spark):
     df = spark.createDataFrame(
         [(2, 1), (1, 2), (2, 1), (3, 2)], "u long, v long"
@@ -76,31 +62,34 @@ def test_star_empty_edges(spark):
     assert rounds <= 4  # one converged contraction pair (r17 batching)
 
 
-def test_truncate_lineage_uses_reliable_checkpoint_when_configured(sf_dir):
+def test_truncate_lineage_uses_reliable_checkpoint_when_configured(
+    sf_dir, repo_root
+):
     """With a checkpoint dir configured, the iterative operators route
     lineage truncation through executor-loss-safe checkpoint() instead of
-    localCheckpoint(), without changing a single result value.
+    localCheckpoint(), without changing a single result value: the
+    cluster labels and the trained BPE merge rules.
 
     Runs in its OWN interpreter: setCheckpointDir is SparkContext-level and
     cannot be unset, so doing this on the shared session fixture would
     silently switch every later test to reliable checkpoints."""
     import subprocess
-    import sys
 
     script = """
 import sys, glob, shutil, tempfile
-sys.path.insert(0, "/root/repo")
 from sql2all_spark.registry import all_specs
 from sql2all_spark.session import get_spark
 spark = get_spark("cktest", master="local[4]", shuffle_partitions=4)
 sf_dir = sys.argv[1]
-build = all_specs()["dedup_clusters"].builder
-baseline = sorted(map(tuple, build(spark, sf_dir).collect()))
+specs = all_specs()
+names = ["dedup_clusters", "text_bpe_train"]
+run = lambda n: sorted(map(tuple, specs[n].builder(spark, sf_dir).collect()))
+baseline = {n: run(n) for n in names}
 ckdir = tempfile.mkdtemp(prefix="sql2all_ck_")
 spark.sparkContext.setCheckpointDir(ckdir)
 assert spark.sparkContext.getCheckpointDir() is not None
-rows = sorted(map(tuple, build(spark, sf_dir).collect()))
-assert rows == baseline, "values changed under reliable checkpointing"
+for n in names:
+    assert run(n) == baseline[n], "values changed under reliable checkpointing: " + n
 assert glob.glob(ckdir + "/*/rdd-*"), "no checkpoint written to dir"
 shutil.rmtree(ckdir, ignore_errors=True)
 print("CKPT_OK")
@@ -110,5 +99,6 @@ print("CKPT_OK")
         capture_output=True,
         text=True,
         timeout=300,
+        cwd=repo_root,
     )
     assert "CKPT_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]

@@ -8,10 +8,6 @@ other.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from sql2all_spark.registry import all_specs
 
 
@@ -1381,7 +1377,7 @@ def test_sp_train_loop_conserves_chars_shrinks_and_reenters_literally(
     for r in rows:
         assert r["em1_count"] == em1_of.get(r["piece"], 0), r
     # (d) literal re-entry: same plan under different cost tables
-    words, vc, _ = _em_round(spark, sf_dir)
+    words, vc, _, _ = _em_round(spark, sf_dir)
     costs = {r["piece"]: r["cost"] for r in vc.collect()}
     costs2 = {p: c + 1000 for p, c in costs.items()}
 

@@ -7,14 +7,9 @@ This generalizes the reference's only test — a parquet read-back row count
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
-
-from check import frame_rows  # tools/check.py
+from tools.check import frame_rows
 
 from sql2all_spark.registry import all_specs
 

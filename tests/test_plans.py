@@ -9,10 +9,6 @@ aggregates run partial→final (map-side combine before the exchange).
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from sql2all_spark.plans import physical_plan
 from sql2all_spark.registry import all_specs
 

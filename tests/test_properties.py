@@ -15,13 +15,9 @@ max_examples stays low while each example carries many generated rows.
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
@@ -312,8 +308,7 @@ SELECT {_bpe_pass_sql(1)} AS enc FROM e0
 def test_union_find_components_match_transitive_closure(edges):
     """The sf1 replay verifier's union-find must agree with a brute-force
     transitive closure (min-label semantics) on arbitrary graphs."""
-    sys.path.insert(0, "/root/repo/tools")
-    from verify_clusters_sf1 import components
+    from tools.verify_clusters_sf1 import components
 
     pairs = pd.DataFrame(
         {"doc_a": [a for a, _ in edges], "doc_b": [b for _, b in edges]}

@@ -15,12 +15,8 @@ our engine:
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from sql2all_spark.export import export
 

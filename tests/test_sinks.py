@@ -6,11 +6,7 @@ assertions, plus the error paths for bad scheme/extension.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from sql2all_spark.sinks import format_from_extension, write_output
 
@@ -108,6 +104,26 @@ def test_arrow_ipc_single_file(spark, sample, tmp_path):
         tbl = reader.read_all()
     assert tbl.num_rows == 3
     assert tbl.column_names == ["id", "name", "score"]
+
+
+def test_arrow_ipc_filtered_not_null_column(spark, sf_dir, tmp_path):
+    """A filtered column arrives at the executor as ``not null`` while the
+    driver schema says nullable; the writer must conform every batch to
+    the driver schema instead of failing on the mismatch."""
+    from sql2all_spark.export import export
+    from sql2all_spark.sources import read_source
+
+    query = (
+        "SELECT l_orderkey, l_extendedprice, l_shipdate FROM src"
+        " WHERE l_shipdate >= DATE '1998-01-01'"
+    )
+    src = f"parquet://{sf_dir}/lineitem.parquet"
+    out = str(tmp_path / "o.arrow")
+    want = export(spark, src, query, out)
+    back = read_source(spark, f"arrow://{out}", "SELECT * FROM src")
+    assert back.columns == ["l_orderkey", "l_extendedprice", "l_shipdate"]
+    assert back.count() > 0
+    assert _rows(back) == _rows(want)
 
 
 def test_bad_extension_raises():

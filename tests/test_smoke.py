@@ -1,9 +1,5 @@
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_entry_returns_rows(spark):
     import __spark_entry__ as e

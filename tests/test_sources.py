@@ -8,11 +8,7 @@ the dispatch/URL layer, not a live connection).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from sql2all_spark.export import export
 from sql2all_spark.sinks import write_output
@@ -51,6 +47,21 @@ def test_arrow_source_roundtrip(spark, tmp_path):
         spark, f"arrow://{path}", "SELECT id, name FROM src WHERE id = 2"
     )
     assert [tuple(r) for r in df.collect()] == [(2, "b")]
+
+
+def test_arrow_source_keeps_nullable_bigint(spark, tmp_path):
+    """An arrow file with a nullable int64 column reads back as bigint
+    with its null intact, not as the double a pandas detour makes of it."""
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
+
+    path = str(tmp_path / "n.arrow")
+    tbl = pa.table({"n": pa.array([1, None, 2**62], pa.int64())})
+    with ipc.new_file(path, tbl.schema) as w:
+        w.write_table(tbl)
+    df = read_source(spark, f"arrow://{path}", "SELECT n FROM src")
+    assert df.schema.simpleString() == "struct<n:bigint>"
+    assert sorted((r.n for r in df.collect()), key=str) == [1, 2**62, None]
 
 
 def test_export_end_to_end(spark, sf_dir, tmp_path):

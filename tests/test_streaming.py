@@ -3,10 +3,6 @@ compare against batch twins, never wall-clock)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from sql2all_spark.streaming import jobs
 from sql2all_spark.streaming.batch_twins import (
     stream_dedup_watermark,
