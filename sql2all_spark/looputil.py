@@ -1,4 +1,22 @@
-"""Scale-adaptive shuffle width for driver-loop operators.
+"""Bounded-state fast path and scale-adaptive shuffle width for
+driver-loop operators.
+
+Fast path first.  A loop whose state is bounded by vocabulary or edge
+count, not corpus size, still pays Spark's per-job floor every round
+(measured on 4 cores: ``text_bpe_train`` ran 28 jobs per call, with
+1.1-4.0 s of driver gap against 0.3-0.5 s of executor CPU).
+:func:`collect_if_bounded` counts the loop's checkpointed initial state
+and, when the count is at or below ``LOCAL_LOOP_MAX_ROWS``, collects it
+so the caller runs the whole loop on the driver in one pass (greedy
+merge rounds in ``bpe_train``, union-find in ``graph.star_components``).  Below the gate
+the loop mutates no session conf: :func:`loop_shuffle_partitions` is
+never entered.  Above it the distributed loop runs unchanged — the only
+path when the state does not fit one process.  The gate sits below both
+measured crossovers (4 cores, synthetic vocabularies of 2-10 letter
+words): 10 BPE rounds on the driver, collect and result frame included,
+took 0.6-1.0 s at 10k words vs 2.5-4.5 s distributed, 2.8-3.1 s vs
+3.5-5.5 s at 50k, and 5.4-5.7 s vs 3.5-4.0 s at 100k; union-find over
+1M edges took 2.9 s.
 
 The iterative operators (star contraction, BPE merge rounds, EM/prune
 and codebook training loops) run many small Spark jobs over slim,
@@ -41,7 +59,10 @@ from __future__ import annotations
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
+
+# Largest loop state (rows) run on the driver instead of as Spark rounds.
+LOCAL_LOOP_MAX_ROWS = 50_000
 
 LOOP_ROWS_PER_PARTITION = 4_000_000
 LOOP_MIN_PARTITIONS = 8
@@ -55,6 +76,16 @@ LOOP_MIN_PARTITIONS = 8
 # for AQE to coalesce and no skew to split, above it (cluster-scale
 # frames) AQE keeps its value and stays on.
 LOOP_AQE_OFF_ROWS = LOOP_ROWS_PER_PARTITION
+
+
+def collect_if_bounded(state: DataFrame) -> list[Row] | None:
+    """``state``'s rows when it has at most ``LOCAL_LOOP_MAX_ROWS`` of
+    them, else ``None``.  ``state`` must already be checkpointed: the
+    count is then a block scan, where counting the uncheckpointed plan
+    above the gate would recompute its whole input a second time."""
+    if state.count() > LOCAL_LOOP_MAX_ROWS:
+        return None
+    return state.collect()
 
 
 @contextmanager

@@ -10,22 +10,28 @@ in the round-1 statistics.  A single mining pass (what the encoder's
 static rank table approximates) systematically over-ranks pairs whose
 occurrences overlap earlier merges; the loop is the exact algorithm.
 
-Execution shape (the ``graph.py`` iterative pattern):
+Execution shape:
 - state is the DISTINCT-WORD vocabulary as (count, symbol-array) — vocab-
   sized, not corpus-sized; the corpus text is touched exactly once to
-  build word counts (one partial-agg exchange);
-- each round mines the argmax pair with a vocab-local adjacent-pair
-  explode + partial-agg groupBy + 1-row ``TakeOrderedAndProject`` (the
-  same bounded-driver-scalar class as the kmeans/pagerank convergence
-  aggregates — O(1) rows cross to the driver per round);
-- the winning merge applies as ONE parallel higher-order pass (merges
-  are restricted to sym_a <> sym_b, so greedy left-to-right matches
-  can never overlap and the pass needs no sequential scan — the same
-  argument as tokenize._bpe_pass_sql);
-- the loop state IS the per-round checkpoint (``cache.checkpoint_tracked``
-  picks reliable or local storage) — round N's plan references round N-1 once for the pass and
-  once for mining, so an untruncated loop grows multiplicatively, and a
-  cache on top of the checkpoint would only store a second copy.
+  build word counts (one partial-agg exchange), and that vocab is
+  checkpointed (``cache.checkpoint_tracked`` picks reliable or local
+  storage);
+- a vocab of at most ``looputil.LOCAL_LOOP_MAX_ROWS`` words is collected
+  ONCE and every round runs on the driver (:func:`_train_local`): pair
+  counts, the argmax and the greedy merge in plain Python, no Spark job
+  per round.  The argmax order (pair_count desc, sym_a asc, sym_b asc)
+  is the distributed one: Python ``str`` order is code-point order,
+  which equals Spark's UTF-8 binary order;
+- a larger vocab runs the distributed loop: each round mines the argmax
+  pair with a vocab-local adjacent-pair explode + partial-agg groupBy +
+  1-row ``TakeOrderedAndProject`` (one row crosses to the driver per
+  round), and the winning merge applies as ONE parallel higher-order
+  pass, ``tokenize._bpe_pass_col`` (merges are restricted to
+  sym_a <> sym_b, so greedy left-to-right matches can never overlap and
+  the pass needs no sequential scan — the same argument as
+  tokenize._bpe_pass_sql).  Each round's vocab is checkpointed: round N's
+  plan references round N-1 once for the pass and once for mining, so
+  an untruncated loop grows multiplicatively.
 
 The oracle replays the IDENTICAL loop as mechanically-unrolled SQL (one
 mine-CTE + one apply-CTE per round), so the driver's value gate proves
@@ -40,6 +46,8 @@ to the LLM-pipeline extension family (SURVEY.md §2).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,26 +93,40 @@ def _mine_best(vocab: DataFrame) -> DataFrame:
     )
 
 
-def _apply_merge(syms: Column, a: str, b: str) -> Column:
-    """One parallel merge pass replacing adjacent (a, b) with a||b.
+def _merge_local(syms: list[str], a: str, b: str) -> list[str]:
+    """Greedy left-to-right merge of adjacent (a, b) into a||b — the
+    driver twin of ``tokenize._bpe_pass_col`` (equal to it because
+    a != b, see module docstring)."""
+    out: list[str] = []
+    i = 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
 
-    Correct without a sequential scan because a != b: a match starting at
-    i and another at i+1 would require syms[i+1] = b = a.  An element is
-    consumed iff its left neighbor started a merge."""
-    la, lb = F.lit(a), F.lit(b)
-    step = F.transform(
-        F.sequence(F.lit(0), F.size(syms) - 1),
-        lambda i: F.when(
-            (F.get(syms, i) == la) & (F.get(syms, i + 1) == lb),
-            F.lit(a + b),
-        )
-        .when(
-            (i > 0) & (F.get(syms, i - 1) == la) & (F.get(syms, i) == lb),
-            F.lit(None).cast("string"),
-        )
-        .otherwise(F.get(syms, i)),
-    )
-    return F.filter(step, lambda x: x.isNotNull())
+
+def _train_local(
+    vocab: list[tuple[int, list[str]]], rounds: int
+) -> tuple[list[tuple], list[tuple[int, list[str]]]]:
+    """The training loop over a collected (c, syms) vocab: same rules and
+    final vocab as the distributed rounds."""
+    rules: list[tuple] = []
+    for rank in range(1, rounds + 1):
+        counts: Counter[tuple[str, str]] = Counter()
+        for c, syms in vocab:
+            for pair in zip(syms, syms[1:]):
+                if pair[0] != pair[1]:
+                    counts[pair] += c
+        if not counts:
+            break
+        (a, b), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        rules.append((rank, a, b, a + b, n))
+        vocab = [(c, _merge_local(syms, a, b)) for c, syms in vocab]
+    return rules, vocab
 
 
 def _initial_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,27 +157,39 @@ def train_bpe(
     Rules are (rank, sym_a, sym_b, merged, pair_count) tuples; the final
     vocab is the (c, syms) frame after all merges — exposed so tests can
     pin encoder consistency."""
-    cur = checkpoint_tracked(_initial_vocab(spark, sf_dir))
+    return _train_vocab(_initial_vocab(spark, sf_dir), rounds)
+
+
+def _train_vocab(
+    vocab: DataFrame, rounds: int
+) -> tuple[list[tuple], DataFrame]:
+    """:func:`train_bpe` from a (c, syms) vocab frame."""
+    from sql2all_spark.looputil import (
+        collect_if_bounded,
+        loop_shuffle_partitions,
+    )
+    from sql2all_spark.operators.tokenize import _bpe_pass_col
+
+    # eager=False: the gate's count materializes the checkpoint blocks
+    cur = checkpoint_tracked(vocab, eager=False)
+    local = collect_if_bounded(cur)
+    if local is not None:
+        rules, final = _train_local([(r.c, r.syms) for r in local], rounds)
+        return rules, cur.sparkSession.createDataFrame(final, cur.schema)
     rules: list[tuple] = []
     # Loop shuffles sized from the materialized vocab count, AQE off for
     # tiny frames (looputil) — each mining round is one pair-explode +
     # partial-agg + argmax over a bounded word-count-sized frame.
-    from sql2all_spark.looputil import loop_shuffle_partitions
-
     with loop_shuffle_partitions(cur):
         for rank in range(1, rounds + 1):
             best = _mine_best(cur).collect()
             if not best:
                 break  # vocabulary fully merged (not reachable on the fixture)
-            r = best[0]
-            rules.append(
-                (rank, r["sym_a"], r["sym_b"], r["sym_a"] + r["sym_b"],
-                 r["pair_count"])
-            )
+            a, b, n = best[0]
+            rules.append((rank, a, b, a + b, n))
+            merge = {"sym_a": F.lit(a), "sym_b": F.lit(b)}
             cur = checkpoint_tracked(
-                cur.select(
-                    "c", _apply_merge(F.col("syms"), r["sym_a"], r["sym_b"]).alias("syms")
-                )
+                cur.select("c", _bpe_pass_col(F.col("syms"), merge).alias("syms"))
             )
     return rules, cur
 
@@ -215,15 +249,19 @@ ORDER BY rank ASC NULLS FIRST
     doc=f"Iterated BPE training ({BPE_TRAIN_ROUNDS} merge rounds,"
     " Sennrich et al. 2016): alternate pair-mining and merge application"
     " so later rounds see merged symbols — the loop text_bpe_merge_mine's"
-    " single round approximates.  Per round: vocab-local pair explode +"
-    " partial-agg + 1-row TakeOrderedAndProject argmax (O(1) driver"
-    " rows), one parallel a<>b merge pass, lineage truncation.  The"
+    " single round approximates.  A vocab within looputil's local-loop"
+    " gate is collected once and trained on the driver; a larger one runs"
+    " Spark rounds: vocab-local pair explode + partial-agg + 1-row"
+    " TakeOrderedAndProject argmax, one parallel a<>b merge pass, lineage"
+    " truncation.  The"
     " unrolled-SQL oracle proves the merge table byte-identical: rank,"
     " pair, and corpus count per round.",
 )
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules, _final_vocab = train_bpe(spark, sf_dir)
+    # rules are built in rank order and a local relation keeps its row
+    # order, so no sort (sorting ten rows cost three Spark jobs)
     return spark.createDataFrame(
         rules, "rank long, sym_a string, sym_b string, merged string,"
         " pair_count long"
-    ).orderBy(F.col("rank").asc_nulls_first())
+    )

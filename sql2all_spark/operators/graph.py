@@ -2,16 +2,17 @@
 graph — the step that turns pairwise similarity into actionable dedup
 decisions (one keeper per cluster, drop the rest).
 
-Algorithm: alternating large-star/small-star contraction
-(:func:`star_components`, Kiveris et al.) over the edge list.  Every round
-rewires edges toward smaller node ids; at the fixpoint the edge set is a
-star forest whose centers are the component minima.  Rounds needed =
-O(log d) for component diameter d, so deep chains (drifted successive
-revisions) stay cheap.  Each round is three exchanges on the slim edge
-list, its lineage truncated through ``cache.checkpoint_tracked``.
-
-This is the driver-side-loop iterative pattern (like sim_kmeans_iteration)
-— no collect() of data, only a scalar convergence signature every other
+Algorithm (:func:`star_components`): the edge list is checkpointed and
+counted.  An edge list within ``looputil.LOCAL_LOOP_MAX_ROWS`` rows is
+collected once and labelled by union-find on the driver (min-label
+roots), with no Spark job per round.  A larger one runs
+alternating large-star/small-star contraction (Kiveris et al.): every
+round rewires edges toward smaller node ids; at the fixpoint the edge
+set is a star forest whose centers are the component minima.  Rounds
+needed = O(log d) for component diameter d, so deep chains (drifted
+successive revisions) stay cheap.  Each round is three exchanges on the
+slim edge list, its lineage truncated through ``cache.checkpoint_tracked``,
+and only a scalar convergence signature reaches the driver every other
 round.  Both registered names (``dedup_clusters`` and
 ``dedup_clusters_star``) run the same builder against the same oracle.
 
@@ -23,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from sql2all_spark.cache import checkpoint_tracked, persist_tracked
@@ -104,27 +106,68 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.distinct()
 
 
+def _union_find_labels(edges: list) -> list[tuple]:
+    """(node, component minimum) for every node on a non-self-loop edge.
+    Self-loops are skipped because the contraction drops them too
+    (large-star keeps v > u, small-star filters u != v), so a node whose
+    only edge is a self-loop gets no label on either path."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        if u == v:
+            continue
+        ru, rv = find(parent.setdefault(u, u)), find(parent.setdefault(v, v))
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)  # the root is the minimum
+    return [(x, find(x)) for x in parent]
+
+
 def star_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star connected components: converges in
-    O(log d) rounds (d = component diameter) versus min-label propagation's
-    O(d) — the scale-safe variant when clusters can be deep chains.
+    """Connected components of an edge list.
 
     ``edges``: (u, v) pair DataFrame (direction irrelevant).  Returns
     ``(labels, n_rounds)`` where labels is (doc_id, cluster_id) for every
-    node that appears in an edge, cluster_id = min node id of its component.
+    node that appears in a non-self-loop edge, cluster_id = min node id
+    of its component, both of the edge columns' type.
+
+    An edge list within ``looputil.LOCAL_LOOP_MAX_ROWS`` rows is
+    collected once and labelled by union-find on the driver;
+    ``n_rounds`` is then 0.  A larger one runs alternating
+    large-star/small-star contraction, which converges in O(log d)
+    rounds (d = component diameter) versus min-label propagation's
+    O(d) — the scale-safe variant when clusters can be deep chains.
 
     Convergence detection: the edge set only moves "downhill" (every round
     replaces edges with edges to smaller targets), so an unchanged
     (count, hash-xor) signature ⇔ a fixpoint — two scalar aggregates
     every other round, no data collect."""
-    e = checkpoint_tracked(edges.select("u", "v"))
+    from sql2all_spark.looputil import (
+        collect_if_bounded,
+        loop_shuffle_partitions,
+    )
+
+    # eager=False: the gate's count materializes the checkpoint blocks
+    e = checkpoint_tracked(edges.select("u", "v"), eager=False)
+    local = collect_if_bounded(e)
+    if local is not None:
+        t = e.schema["u"].dataType
+        schema = StructType(
+            [StructField("doc_id", t), StructField("cluster_id", t)]
+        )
+        return e.sparkSession.createDataFrame(_union_find_labels(local), schema), 0
     prev_sig = None
     rounds = 0
     # Loop shuffles sized from the materialized edge count (looputil):
     # the session width is for corpus-scale frames, and every round here
     # re-shuffles a slim bounded edge set O(log d) times.
-    from sql2all_spark.looputil import loop_shuffle_partitions
-
     with loop_shuffle_partitions(e):
         while rounds < max_rounds:
             # eager=False: each round's lineage is truncated NOW (the

@@ -143,12 +143,12 @@ def family_hits(spark: SparkSession, sf_dir: str):
         .distinct()
     )
     # The edge-build materialization (star_components' initial
-    # checkpoint) and the star rounds run under a shuffle width derived
-    # from the measured hit count (r17, §2.2): hits is already
-    # materialized, so the count is a cached-block scan; the edge set is
-    # strictly smaller than hits.  star_components' own inner scope then
-    # re-derives from the edge count.  No-op at cluster scale (capped at
-    # the session width).
+    # checkpoint) runs under a shuffle width derived from the measured
+    # hit count (r17, §2.2): hits is already materialized, so the count
+    # is a cached-block scan; the edge set is strictly smaller than hits.
+    # Above the local-loop gate, star_components' own inner scope then
+    # re-derives the rounds' width from the edge count.  No-op at cluster
+    # scale (capped at the session width).
     from sql2all_spark.looputil import loop_shuffle_partitions
 
     with loop_shuffle_partitions(hits):

@@ -16,11 +16,13 @@ max_examples stays low while each example carries many generated rows.
 from __future__ import annotations
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
+from sql2all_spark import looputil
 from sql2all_spark.functions.hashing import (
     base_hash,
     base_hash_sql,
@@ -330,6 +332,67 @@ def test_union_find_components_match_transitive_closure(edges):
                     todo.append(y)
         want[start] = min(seen)
     assert got == want
+
+
+_EDGES = st.lists(
+    st.tuples(st.integers(0, 15), st.integers(0, 15)), min_size=0, max_size=30
+)
+
+
+@_SETTINGS
+@given(_EDGES)
+def test_star_components_local_and_distributed_paths_agree(spark, edges):
+    """Driver union-find and the distributed star contraction give the
+    same labels on random edge lists, with duplicates, reversed edges
+    and self-loops mixed in."""
+    from sql2all_spark.operators.graph import star_components
+
+    head = edges[:5]
+    edges = edges + head + [(v, u) for u, v in head] + [(u, u) for u, _ in head[:2]]
+    df = spark.createDataFrame(edges, "u long, v long")
+
+    def labels():
+        return sorted(map(tuple, star_components(df)[0].collect()))
+
+    local = labels()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(looputil, "LOCAL_LOOP_MAX_ROWS", -1)  # -1: empty lists too
+        assert labels() == local
+
+
+# a tie-prone count range; symbols spanning ASCII, Latin-1 (é), CJK (中),
+# the U+E000-U+FFFF block (ｱ) and the supplementary plane (𝄞): UTF-16 puts
+# 𝄞 before ｱ, code-point and UTF-8 byte order put it after
+_VOCAB = st.lists(
+    st.tuples(
+        st.integers(1, 3), st.text(alphabet="abé中ｱ𝄞", min_size=1, max_size=6)
+    ),
+    min_size=1,
+    max_size=25,
+)
+
+
+@_SETTINGS
+@example(vocab=[(1, "𝄞ｱ"), (1, "ｱ𝄞"), (1, "中é"), (1, "é中"), (1, "ab")])
+@given(_VOCAB)
+def test_bpe_train_local_and_distributed_paths_agree(spark, vocab):
+    """Driver BPE training and the distributed merge rounds give the same
+    rules (rank, pair, count) and the same final vocab on random weighted
+    vocabularies, including pair-count ties broken by symbol order."""
+    from sql2all_spark.operators.bpe_train import _train_vocab
+
+    df = spark.createDataFrame(
+        [(c, list(w)) for c, w in vocab], "c long, syms array<string>"
+    )
+
+    def train():
+        rules, final = _train_vocab(df, 6)
+        return rules, sorted((c, tuple(s)) for c, s in final.collect())
+
+    local = train()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(looputil, "LOCAL_LOOP_MAX_ROWS", -1)
+        assert train() == local
 
 
 @settings(max_examples=25, deadline=None)

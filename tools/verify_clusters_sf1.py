@@ -12,8 +12,11 @@ verifies the SAME contract in near-linear time:
 1. mine the blocked pair list with the NON-recursive part of the shared
    oracle (DuckDB — the same inverted-index join the dedup_ngram_jaccard
    soak entry already times at sf1),
-2. union-find the components in plain Python (min-label semantics,
-   independent of both the Spark propagation loops and the CTE),
+2. union-find the components in plain Python (min-label semantics).
+   This union-find is a deliberately separate reference copy: the
+   library's own driver-side union-find (``graph.star_components``
+   below ``looputil.LOCAL_LOOP_MAX_ROWS`` edges) is the code under
+   test, so the two are not merged,
 3. replay each query's reporting policy (labels + keeper flag + sizes;
    keep-longest keeper selection) in pandas,
 4. compare against the LIVE Spark output cell-for-cell.
