@@ -31,11 +31,8 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (pricing summary over lineitem) on sf0.001.
 
-    Resolved through the registry (NOT a direct operator import): a direct
-    ``from ...relational import q1_pricing_summary`` would register
-    relational's queries first whenever entry() runs before queries() in
-    one process, shifting every position the driver's first-50 correctness
-    window depends on.
+    Resolved through the registry, which wraps the builder so it releases
+    the previous query's tracked caches first.
     """
     configure_existing(spark)
     return registry.queries()["q1_pricing_summary"](spark, SMOKE_SF_DIR)

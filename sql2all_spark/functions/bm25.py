@@ -2,10 +2,7 @@
 
 ``operators/retrieval.py`` (ranked BM25 retrieval) and
 ``operators/fusion.py`` (hybrid RRF fusion) score documents with the
-same BM25 leg; this module holds the single implementation so neither
-operator module imports the other at load time (registry front-window
-positions depend on module import order — the dedup_shared.py /
-pqmath.py precedent).
+same BM25 leg; this module holds the single implementation.
 
 Scoring discipline (unchanged from retrieval.py's original): k1=1.2,
 b=0.75, Lucene-style always-positive idf ln((N-df+0.5)/(df+0.5)+1);

@@ -3,10 +3,8 @@ unrolled-GD chain, session weight store).
 
 Extracted from ``operators/classifier.py`` so the per-domain quality
 profile (``operators/quality_profile.py``) can compose the scoring leg
-WITHOUT importing the registering classifier module (the
-``functions/sp_core.py`` / ``functions/bm25.py`` import-order-decoupling
-precedent: registry window positions depend on module import order and
-``register()`` evaluates oracles eagerly).  All semantics documented in
+WITHOUT importing the registering classifier module.  All semantics
+documented in
 operators/classifier.py's module docstring.
 """
 
@@ -25,10 +23,7 @@ CLF_GOLD_CHARS = 280  # heuristic gold label: length-gate quality proxy
 CLF_SCALE = 1_000_000  # sigmoid fixed-point scale
 CLF_HALF = CLF_SCALE // 2
 # Per-source keep budget for text_source_quality_caps and the tau x caps
-# composition (operators/tau_caps.py).  Lives here, not in classifier.py,
-# so composing operators can import it without dragging the classifier
-# module's registrations into the driver window (the r15 shared-core
-# import-order discipline).
+# composition (operators/tau_caps.py).
 CAP_N = 5
 
 

@@ -2,8 +2,7 @@
 
 Extracted from ``operators/domain_label.py`` so the per-domain quality
 profile (``operators/quality_profile.py``) can compose the assignment
-WITHOUT importing the registering module (the ``functions/sp_core.py`` /
-``functions/clf_core.py`` import-order-decoupling precedent).  All
+WITHOUT importing the registering module.  All
 semantics documented in operators/domain_label.py's module docstring:
 decimal-mean centroids from the deterministic seed subset, argmax-cosine
 assignment as a broadcast-cross + partial-aggregatable struct-MIN.

@@ -7,10 +7,8 @@ hyperplanes use INTEGER components from a fixed seed: integer×double
 products keep the two engines' dot products identical, where float literals
 would need exact decimal→binary agreement in two SQL parsers.
 
-Pulled out of ``operators/similarity.py`` so modules registered ahead of it
-in the driver window (e.g. ``operators/embed_screen.py``) can share the
-recipes without triggering similarity's query registrations at import time
-(registration order is the driver-window contract — see ``registry.py``).
+Shared by ``operators/similarity.py``, ``operators/embed_screen.py`` and
+the other embedding operators.
 """
 
 from __future__ import annotations

@@ -38,9 +38,7 @@ def hash_bucket_sql(expr: str, buckets: int) -> str:
     return f"{base_hash_sql(f'CAST({expr} AS VARCHAR)')} % {buckets}"
 
 
-# Percent-resolution bucket shared by sampling.py and pipeline.py (moved
-# here from sampling.py so pipeline doesn't import an operator module at
-# load time — registry front-window positions depend on import order).
+# Percent-resolution bucket shared by sampling.py and pipeline.py.
 SAMPLE_BUCKETS = 100  # hash-mod space: 1% resolution
 
 

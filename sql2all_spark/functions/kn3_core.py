@@ -3,10 +3,8 @@
 ``operators/kn_trigram.py`` registers the per-document scoring query;
 ``operators/kn_ccnet.py`` composes the same scorer into CCNet-style
 per-language perplexity buckets.  The count-table chain, the bounded
-serving model, and the per-doc score builder live HERE so the bucketing
-composition can import them without dragging kn_trigram's registration
-into the driver window (the r15 shared-core import-order discipline:
-``register()`` evaluates oracles eagerly at import time).
+serving model, and the per-doc score builder live HERE, where nothing
+registers, so both operators share one definition.
 
 Everything below moved VERBATIM from ``operators/kn_trigram.py`` (see
 that module's docstring for the model derivation, the three-way int64

@@ -2,11 +2,8 @@
 
 ``operators/pq.py`` (single-refinement PQ+ADC), ``operators/pq_train.py``
 (looped codebook training) and ``operators/ivfpq.py`` (IVF-routed PQ)
-all build on the same subspace/codebook/ADC pieces, but the registry's
-first-50 window depends on MODULE IMPORT ORDER — a front module
-importing ``operators.pq`` at load time would register its query into
-the front window and shift every position (the dedup_shared.py
-precedent).  This module holds the shared math and registers NOTHING.
+all build on the same subspace/codebook/ADC pieces.  This module holds
+the shared math and registers NOTHING.
 
 All helpers follow the cross-engine determinism discipline
 (functions/embed.py): distances fold left-to-right over double-cast

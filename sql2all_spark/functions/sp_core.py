@@ -3,10 +3,8 @@
 Extracted from ``operators/sp_unigram.py`` so the multi-round EM+prune
 LOOP operator (``operators/sp_loop.py``) can compose the seed chain, the
 Viterbi E-step and the unrolled-DP oracle CTE generators WITHOUT
-importing the registering operator module (the ``functions/bm25.py``
-import-order-decoupling precedent: registry window positions depend on
-module import order, and ``register()`` evaluates oracles eagerly).
-All semantics documented in operators/sp_unigram.py's module docstring.
+importing the registering operator module.  All semantics documented
+in operators/sp_unigram.py's module docstring.
 """
 
 from __future__ import annotations

@@ -2,10 +2,8 @@
 
 ``operators/tau_apply.py`` and ``operators/tau_caps.py`` both derive
 per-domain discrete-median thresholds over the classifier-scored,
-domain-assigned corpus.  The chain lives here — not in tau_apply — so
-the caps composition can import it without dragging tau_apply's
-registration into the driver window (the r15 shared-core import-order
-discipline: ``register()`` evaluates oracles eagerly at import time).
+domain-assigned corpus.  The chain lives here, where nothing
+registers, so both operators share one definition.
 
 Expected context: callers prepend ``clf_core._w_chain_sql`` (defines
 ``feats`` / ``w{CLF_ROUNDS}``) and ``domain_core.assign_ctes`` (defines

@@ -2,12 +2,8 @@
 
 ``operators/text.py`` registers the per-doc query
 (``text_unigram_lm_score``) and ``operators/ccnet.py`` composes the
-same scorer into CCNet perplexity bucketing.  The registry's first-50
-window depends on MODULE IMPORT ORDER — a front module importing
-``operators.text`` at load time would register all 15 of text.py's
-queries into the front window (the dedup_shared.py / pqmath.py
-precedent) — so the ONE definition of the scorer lives here, where
-nothing registers.
+same scorer into CCNet perplexity bucketing.  The ONE definition of
+the scorer lives here, where nothing registers.
 
 Semantics (KenLM-filter stand-in): two corpus passes — token counts →
 top-V vocabulary with MLE probabilities, broadcast back; per-token

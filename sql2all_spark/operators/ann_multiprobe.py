@@ -113,8 +113,6 @@ FROM ranked WHERE rk <= {MP_TOPK}
 def sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    # Call-time import: similarity registers its own family on first
-    # import (front-window discipline — the curation.py precedent).
     from sql2all_spark.operators.similarity import (
         ANN_INDEX_SCHEMA,
         build_ann_index,

@@ -32,44 +32,28 @@ surface exists there; this is part of the beyond-reference scale family.
 
 from __future__ import annotations
 
-import atexit
 import os
 import re
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql2all_spark.functions.exact import dsum, dsum_sql
 from sql2all_spark.registry import register
-from sql2all_spark.tables import load_table
+from sql2all_spark.tables import load_table, scratch_root
 
 N_BUCKETS = 8
 
-# Bucket files live in a PRIVATE per-process tempdir (mkdtemp: mode 0700,
-# unpredictable suffix), not a fixed world-readable /tmp path — a fixed
-# path lets concurrent sessions on the same sf_dir clobber each other's
-# bucketed data mid-join and trusts a pre-existing attacker-created
-# directory (ADVICE r8).  Catalog table names carry the same per-process
-# suffix so two local sessions sharing a metastore do not collide.
-_BUCKET_ROOT: str | None = None
 
-
-def _bucket_root() -> str:
-    global _BUCKET_ROOT
-    if _BUCKET_ROOT is None:
-        _BUCKET_ROOT = tempfile.mkdtemp(prefix="sql2all_spark_bucketed_")
-        atexit.register(shutil.rmtree, _BUCKET_ROOT, ignore_errors=True)
-    return _BUCKET_ROOT
-
-
+# Bucket files live under the per-process tables.scratch_root(); catalog
+# table names carry the same per-process suffix so two local sessions
+# sharing a metastore do not collide.
 def _sf_key(sf_dir: str) -> str:
     sf = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.strip("/"))
     # per-process disambiguator: pid + the FULL sanitized tempdir basename
     # (mkdtemp's random suffix may itself contain underscores, so taking
     # everything after the last one could shrink to 0-2 chars — ADVICE r9)
-    base = re.sub(r"[^0-9a-zA-Z]", "", os.path.basename(_bucket_root())).lower()
+    base = re.sub(r"[^0-9a-zA-Z]", "", os.path.basename(scratch_root())).lower()
     return f"{sf}_p{os.getpid()}_{base}"
 
 
@@ -96,7 +80,7 @@ def write_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .format("parquet")
             .bucketBy(N_BUCKETS, bkey)
             .sortBy(bkey)
-            .option("path", f"{_bucket_root()}/{key}/{src}")
+            .option("path", f"{scratch_root()}/bucketed/{key}/{src}")
             .saveAsTable(table)
         )
 

@@ -7,10 +7,7 @@ Composition: the per-doc score is the shared unigram-LM scorer
 (functions/unigram_lm.py, the KenLM stand-in, also registered as
 text_unigram_lm_score) — used as a builder on the Spark side and
 spliced as a CTE on the oracle side, so the scorer has ONE definition.
-It lives in a non-registering functions/ module because this module
-sits in the registry's FRONT window: importing operators.text here
-would drag all 15 of text.py's registrations forward (the pqmath /
-dedup_shared import-order trap).  Buckets are exact
+Buckets are exact
 NTILE(3) per language with a doc_id tiebreak (cross-engine-identical);
 the output is the slim per-(lang, bucket) profile a curation run
 records: doc count, token count, and the score band.

@@ -147,8 +147,7 @@ def text_quality_classifier_train(
 # RefinedWeb-style per-source cap against over-represented domains.
 # ---------------------------------------------------------------------------
 
-# per-source keep budget: clf_core.CAP_N (shared with tau_caps without
-# dragging this module's registrations into the driver window; imported
+# per-source keep budget: clf_core.CAP_N (shared with tau_caps; imported
 # in the header block above)
 
 

@@ -364,10 +364,6 @@ ORDER BY cluster_id ASC NULLS FIRST
     " edge-incident nodes.",
 )
 def dedup_keeper_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Deferred import: graph (and its dedup dependency) register their own
-    # queries on first import — importing them at THIS module's load time
-    # would pull both into the front of the driver window and shift every
-    # registration position (registry._QUERY_MODULES ordering contract).
     # dedup_clusters_star is the same builder as dedup_clusters (star
     # contraction, O(log d) rounds).
     from sql2all_spark.operators.graph import dedup_clusters_star

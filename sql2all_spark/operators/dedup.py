@@ -247,9 +247,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified.select("doc_a", "doc_b", jaccard.alias("jaccard"))
 
 
-# moved to dedup_shared.py (non-registering) so front-window modules can
-# use the pair oracle without importing this module at load time;
-# re-exported here for existing importers
+# defined in dedup_shared.py; re-exported here for existing importers
 from sql2all_spark.operators.dedup_shared import (  # noqa: E402
     JACCARD_FLOOR,
     NGRAM_BUCKET_WIDTH,

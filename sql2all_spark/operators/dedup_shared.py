@@ -1,12 +1,9 @@
 """Shared near-dup-graph constants and oracle SQL (non-registering).
 
 ``dedup.py`` and ``graph.py`` both build on the blocked n-gram-Jaccard
-pair oracle; ``curation.py``'s keeper selection needs it too, but the
-registry's first-50 window depends on MODULE IMPORT ORDER — a front
-module importing ``dedup``/``graph`` at load time would register those
-modules' queries into the front window and shift every position.  This
-module holds the shared pieces and registers NOTHING, so any module can
-import it safely at decoration time.
+pair oracle; ``curation.py``'s keeper selection and ``kfold.py`` need it
+too.  This module holds the shared pieces and registers NOTHING, so any
+module can import it at decoration time.
 
 The strings are byte-identical to their previous homes in dedup.py /
 graph.py (moved verbatim; no oracle output changes).

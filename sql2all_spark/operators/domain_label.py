@@ -340,9 +340,6 @@ ORDER BY domain ASC NULLS FIRST
     " per-doc-slim exchanges, one per-doc join, a k-row broadcast.",
 )
 def embed_domain_mix_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Lazy import: novelty.py registers its query on import; module
-    # import order is the driver-window contract, so the composition
-    # imports at call time (the template.py discipline).
     from sql2all_spark.operators.novelty import text_ngram_novelty
 
     from sql2all_spark.cache import persist_tracked

@@ -41,6 +41,8 @@ table, VERDICT r10 next-round items 2-3).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,7 +63,7 @@ from sql2all_spark.functions.pqmath import (
     subvector_frame,
 )
 from sql2all_spark.registry import register
-from sql2all_spark.tables import load_table
+from sql2all_spark.tables import load_table, scratch_root
 
 IVFPQ_CENT_IDS = list(range(1, 9))  # deterministic "trained" coarse centroids
 IVFPQ_NPROBE = 2
@@ -652,7 +654,8 @@ def ivfpq_residual_impl(
 # the query touches nprobe/K of the files and shuffles NOTHING.
 # ---------------------------------------------------------------------------
 
-IVFPQ_INDEX_ROOT = "/tmp/sql2all_spark_ivfpq_index"
+# Stored-index root; None means ivfpq_index_root()'s per-process default.
+IVFPQ_INDEX_ROOT: str | None = None
 # explicit read schema: partition-column inference must not narrow
 # cent_id (stored as dir names) away from the oracle's BIGINT
 IVFPQ_INDEX_SCHEMA = (
@@ -661,9 +664,15 @@ IVFPQ_INDEX_SCHEMA = (
 )
 
 
+def ivfpq_index_root() -> str:
+    """``IVFPQ_INDEX_ROOT`` when set, else ``ivfpq_index`` under the
+    per-process :func:`~sql2all_spark.tables.scratch_root`."""
+    return IVFPQ_INDEX_ROOT or os.path.join(scratch_root(), "ivfpq_index")
+
+
 def _index_path(sf_dir: str, suffix: str = "") -> str:
     return (
-        f"{IVFPQ_INDEX_ROOT}/{sf_dir.strip('/').replace('/', '_')}"
+        f"{ivfpq_index_root()}/{sf_dir.strip('/').replace('/', '_')}"
         f"{suffix}.parquet"
     )
 
@@ -712,17 +721,6 @@ def build_ivfpq_index(
 
 def _sidecar(path: str, kind: str) -> str:
     return path.replace(".parquet", f"_{kind}.parquet")
-
-
-def _pack_codes(code_rows: DataFrame) -> DataFrame:
-    """(vec_id, codes[M]): the exploded (vec_id, m, c) code rows packed
-    into one m-ordered int array per vector — the stored row shape."""
-    return code_rows.groupBy("vec_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("m", "c"))),
-            lambda s: s.c.cast("int"),
-        ).alias("codes")
-    )
 
 
 def refresh_ivfpq_index(

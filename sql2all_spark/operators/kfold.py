@@ -21,12 +21,6 @@ with a near-dup pair (the corpus-scale majority are singletons that
 never enter the loop); fold assignment itself is one row-local md5
 bucket — no extra shuffle beyond the label join.
 
-Import discipline: graph/dedup are imported INSIDE the builder (by the
-time any builder runs, registry.all_specs has already imported every
-module, so this changes nothing at run time) — a module-scope import
-would register the whole dedup+graph family at this module's front-
-window position (see dedup_shared.py's rationale).
-
 Reference parity: SQL2ALL has no sampling/dedup surface (658-line core
 delegates SQL to the attached DB — src/db/sqlite.rs:79); LLM-pipeline
 extension surface (SURVEY.md §2 extension table).

@@ -13,13 +13,10 @@ doc/trigram counts, the serving-model hit count (how much of each
 bucket the bounded model actually scored — the coverage number a model
 -size sweep tunes), and the exact score band.
 
-Composition discipline: the scorer chain and per-doc builder are
-imported from the non-registering ``kn3_core`` (the r15 shared-core
-rule — importing ``operators.kn_trigram`` here would drag its
-registration into this module's driver-window position).  ONE
-definition of the model on each engine: the oracle prepends
-``kn3_chain_ctes()`` and wraps ``KN3_DOC_SELECT`` as a CTE; the
-builder composes ``kn3_doc_scores``.
+Composition: the scorer chain and per-doc builder are imported from
+the non-registering ``kn3_core``.  ONE definition of the model on each
+engine: the oracle prepends ``kn3_chain_ctes()`` and wraps
+``KN3_DOC_SELECT`` as a CTE; the builder composes ``kn3_doc_scores``.
 
 Membership note: only documents with >= 3 non-empty tokens carry a
 trigram score (the scorer's floor), so shorter documents fall outside

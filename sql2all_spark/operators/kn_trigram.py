@@ -55,10 +55,8 @@ count table; scoring is five broadcast left-joins + one per-doc
 aggregation.  Raw text never crosses an exchange.
 
 The chain, the serving model, and the per-doc score builder live in
-``functions/kn3_core.py`` (moved verbatim in r16) so the CCNet
-bucketing composition (``operators/kn_ccnet.py``) can import them
-without dragging this module's registration into the driver window;
-the assembled oracle text below is byte-identical to the r15 form.
+``functions/kn3_core.py``, shared with the CCNet bucketing composition
+(``operators/kn_ccnet.py``).
 
 Reference parity note: SQL2ALL has no LM surface (its SQL passes
 through verbatim — src/db/sqlite.rs:79); LLM-pipeline extension family

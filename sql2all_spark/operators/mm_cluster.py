@@ -67,10 +67,6 @@ FROM comp
 def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    # Call-time imports: multimodal/graph register their own families on
-    # first import, so a module-scope import here would pull them into
-    # this module's (front-window) registration slot — the curation.py
-    # precedent.
     from sql2all_spark.operators.graph import star_components
     from sql2all_spark.operators.multimodal import mm_phash_neardup
 

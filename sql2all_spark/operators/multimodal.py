@@ -346,9 +346,8 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- perceptual-hash near-dup: the multimodal twin of dedup_simhash ------
 
-# Constants + the blocking-agnostic pair oracle moved verbatim to
-# multimodal_shared.py (non-registering) so mm_cluster.py can import them
-# at decoration time without registering this module's family early.
+# Constants + the blocking-agnostic pair oracle live in
+# multimodal_shared.py, shared with mm_cluster.py.
 from sql2all_spark.operators.multimodal_shared import (  # noqa: E402
     PHASH_BANDS,
     PHASH_BAND_BITS,

@@ -2,11 +2,8 @@
 
 ``multimodal.py`` owns the pHash near-dup operator; ``mm_cluster.py``
 builds connected components over its pair graph and needs the SAME
-blocking-agnostic pair oracle at decoration time.  Importing
-``multimodal`` from a front-window module would register multimodal's
-whole query family at the importer's position and shift the driver's
-first-50 window (see registry._QUERY_MODULES), so — exactly like
-``dedup_shared.py`` — this module holds the shared pieces and registers
+blocking-agnostic pair oracle at decoration time.  Like
+``dedup_shared.py``, this module holds the shared pieces and registers
 NOTHING.
 
 The strings are byte-identical to their previous home in multimodal.py

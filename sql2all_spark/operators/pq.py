@@ -53,9 +53,9 @@ from pyspark.sql import functions as F
 
 from sql2all_spark.functions.embed import DIM, dbl
 
-# Core PQ math lives in functions/pqmath.py (non-registering) so the
-# IVF-PQ and train-loop operators can share it without import-order
-# coupling; constants/fragments are aliased to keep this module's oracle
+# Core PQ math lives in functions/pqmath.py (non-registering), shared
+# with the IVF-PQ and train-loop operators; constants/fragments are
+# aliased to keep this module's oracle
 # text byte-identical to its pre-refactor form.
 from sql2all_spark.functions.pqmath import (
     PQ_K,

@@ -9,7 +9,8 @@ Scale notes (100 TB): every query here is embarrassingly parallel except the
 final aggregation, which uses Spark's automatic partial (map-side) aggregation
 — the shuffle carries only ``#groups × #partitions`` rows, not the scan.  The
 ORDER BY on aggregated output sorts a tiny relation.  Filters and projections
-reach the parquet reader (verify with ``plans.explain_checks``).
+reach the parquet reader (the plan-audit tests in ``tests/test_plans.py``
+assert ``PushedFilters``/``ReadSchema`` on the physical plan).
 """
 
 from __future__ import annotations

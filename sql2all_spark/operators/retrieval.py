@@ -2,9 +2,7 @@
 
 The sparse-retrieval counterpart to sim_doc_retrieval's dense path: at
 100 TB these are the standard "find training docs matching a probe query"
-tools.  Split out of text.py so the rotation window can carry the retrieval
-queries without dragging text.py's ten other (driver-green) registrations
-(the driver's correctness gate checks the first 50 registered queries).
+tools.
 
 Reference parity: the reference (SQL2ALL) delegates ad-hoc scoring SQL to
 the attached engine; these are the native Spark twins (see SURVEY.md §2.B).
@@ -25,16 +23,14 @@ from sql2all_spark.tables import load_table
 
 
 def _tokens(text: Column) -> Column:
-    # Same whitespace tokenization as text.py's _tokens — duplicated one-liner
-    # rather than imported: importing text.py here would register its queries
-    # at THIS module's position and shift the driver's rotation window.
+    # Same whitespace tokenization as text.py's _tokens.
     return F.split(text, " ")
 
 
 BM25_TOP_K = 10
 
 # Scoring (CTE chain + Spark twin) lives in functions/bm25.py so the
-# hybrid-fusion operator can share it without import-order coupling.
+# hybrid-fusion operator can share it.
 BM25_ORACLE = f"""{bm25_scored_sql()}
 ORDER BY bm25 DESC NULLS LAST, doc_id ASC NULLS FIRST
 LIMIT {BM25_TOP_K}

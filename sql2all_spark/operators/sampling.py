@@ -18,9 +18,8 @@ from pyspark.sql import functions as F
 
 from sql2all_spark.cache import persist_tracked
 
-# Percent-bucket helpers moved to functions/hashing.py (non-registering)
-# so pipeline.py can share them without importing this operator module
-# at load time; aliased to keep this module's call sites stable.
+# Percent-bucket helpers live in functions/hashing.py, shared with
+# pipeline.py; aliased to keep this module's call sites stable.
 from sql2all_spark.functions.hashing import (
     hash_bucket,
     hash_bucket_sql,

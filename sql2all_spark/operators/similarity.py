@@ -21,12 +21,13 @@ scores are rounded to 6 dp before ordering/comparison.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Shared cross-engine embedding arithmetic (moved to functions/embed.py so
-# front-window modules like embed_screen can use it without triggering this
-# module's registrations at import time); aliased to keep call sites stable.
+# Shared cross-engine embedding arithmetic (functions/embed.py, also used
+# by embed_screen); aliased to keep call sites stable.
 from sql2all_spark.functions.embed import DIM, N_PLANES
 from sql2all_spark.functions.embed import HYPERPLANES as _HYPERPLANES
 from sql2all_spark.functions.embed import cosine as _cosine
@@ -38,7 +39,7 @@ from sql2all_spark.functions.embed import sign_bucket as _bucket_spark
 from sql2all_spark.functions.embed import sign_bucket_sql as _bucket_sql
 from sql2all_spark.cache import persist_tracked
 from sql2all_spark.registry import register
-from sql2all_spark.tables import load_table
+from sql2all_spark.tables import load_table, scratch_root
 
 
 BRUTE_TOPK_ORACLE = f"""
@@ -136,7 +137,8 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANN_INDEX_ROOT = "/tmp/sql2all_spark_ann_index"
+# Stored-index root; None means ann_index_root()'s per-process default.
+ANN_INDEX_ROOT: str | None = None
 
 # Explicit read schema for the index: partition-column TYPE INFERENCE would
 # otherwise parse a bit-string like '010110' as the integer 10110 (leading
@@ -152,6 +154,12 @@ def _signature_frame(emb: DataFrame) -> DataFrame:
         _dbl(F.col("embedding")).alias("v"),
         _bucket_spark(_dbl(F.col("embedding"))).alias("bucket"),
     )
+
+
+def ann_index_root() -> str:
+    """``ANN_INDEX_ROOT`` when set, else ``ann_index`` under the
+    per-process :func:`~sql2all_spark.tables.scratch_root`."""
+    return ANN_INDEX_ROOT or os.path.join(scratch_root(), "ann_index")
 
 
 def build_ann_index(
@@ -173,7 +181,7 @@ def build_ann_index(
 
     e = source if source is not None else load_table(spark, sf_dir, "embeddings")
     sigs = _signature_frame(e)
-    path = f"{ANN_INDEX_ROOT}/{sf_dir.strip('/').replace('/', '_')}{suffix}.parquet"
+    path = f"{ann_index_root()}/{sf_dir.strip('/').replace('/', '_')}{suffix}.parquet"
     write_output(sigs, path, partition_by=["bucket"])
     return path
 

@@ -15,10 +15,7 @@ boundary, and the integer fill rate (the last sequence is the only
 one under ``SP_PACK_LEN``).
 
 Composition (ONE definition each): per-doc piece counts are
-``sp_encode.encode_pieces`` (imported inside the builder — by query
-run time the registry has loaded every module, and a module-scope
-import would drag text_sp_encode's registration into this module's
-driver-window position); the oracle prepends ``sp_loop``'s structural
+``sp_encode.encode_pieces``; the oracle prepends ``sp_loop``'s structural
 WITH-chain + ``sp_core.encode_np_dw_ctes`` (the sf1-cache-stable text
 sp_encode's own oracle composes).  Docs whose words were all skipped
 (> SP_WORD_MAX chars) or empty still ship their EOS token — every
@@ -128,10 +125,6 @@ ORDER BY seq_id ASC NULLS FIRST
     " single-partition global window.",
 )
 def text_sp_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # run-time import: module-scope would drag text_sp_encode's
-    # registration into this module's window position (the r15
-    # shared-core import-order discipline) — by the time any query
-    # runs, the registry has already loaded every module in list order
     from sql2all_spark.operators.sp_encode import encode_pieces
 
     d, _dw, per_enc = encode_pieces(spark, sf_dir)

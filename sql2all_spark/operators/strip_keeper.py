@@ -45,9 +45,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# ONLY non-registering functions.* imports plus template_strip (whose
-# registration rides in the window alongside this query — disclosed in
-# the rotation contract).
 from sql2all_spark.cache import persist_tracked
 from sql2all_spark.functions.clf_core import (
     CLF_ROUNDS,

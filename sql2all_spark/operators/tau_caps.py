@@ -51,10 +51,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sql2all_spark.cache import persist_tracked
-# ONLY non-registering functions.* imports here: register() evaluates
-# oracles eagerly at import time, so importing classifier / tau_apply
-# at module scope would drag their queries into the driver window
-# (the r15 shared-core import-order discipline).
 from sql2all_spark.functions.clf_core import (
     CAP_N,
     _feats,

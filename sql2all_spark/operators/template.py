@@ -52,11 +52,8 @@ from sql2all_spark.cache import materialize_tracked
 from sql2all_spark.functions.hashing import base_hash_sql
 from sql2all_spark.registry import register
 
-# Gram width comes from the span detector; re-declared here via import
-# at call time (see builder) to keep this module's import free of
-# registration side effects — operators/text.py registers its queries
-# on import, and module import order is the driver-window contract
-# (registry._QUERY_MODULES).
+# Gram width of the span detector in operators/text.py, re-declared here
+# for the oracle; family_hits asserts the two agree.
 DUP_SPAN_GRAM = 5
 
 
@@ -111,10 +108,6 @@ def family_hits(spark: SparkSession, sf_dir: str):
     dup-gram hit table (doc_id, pos, h) and the per-hash family label
     (h, family_id) from the O(log d) star contraction.  Consumed by
     text_template_mining and the keeper policy."""
-    # Lazy imports: text.py / graph.py register their own queries on
-    # import, and THIS module's position in registry._QUERY_MODULES is
-    # part of the driver-window contract — importing them at module
-    # scope would pull their registrations forward to this slot.
     from sql2all_spark.operators.graph import star_components
     from sql2all_spark.operators.text import DUP_SPAN_GRAM as _TEXT_GRAM
     from sql2all_spark.operators.text import dup_gram_hits

@@ -616,8 +616,7 @@ from sql2all_spark.functions.unigram_lm import (  # noqa: E402
     " is exact and order-free in both engines.",
 )
 def text_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one definition, shared with operators/ccnet.py — see
-    # functions/unigram_lm.py for the import-order rationale
+    # one definition, shared with operators/ccnet.py (functions/unigram_lm.py)
     return unigram_doc_scores(spark, sf_dir)
 
 

@@ -1,9 +1,5 @@
-"""Vectorized scalar pandas UDF (split from :mod:`udfs` so the
-registry's correctness-window ordering stays query-exact: this query has a
-driver-green r01 row, while the rest of the UDF family and every round-2
-addition still need theirs — registration order is the driver's check
-order, and modules are its granularity).
-"""
+"""Vectorized scalar pandas UDF (the rest of the UDF family is in
+:mod:`udfs`)."""
 
 from __future__ import annotations
 

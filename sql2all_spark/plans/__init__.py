@@ -17,39 +17,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    """Catalyst's optimized logical plan as text."""
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """Every ``PushedFilters: [...]`` block found in the scan nodes."""
-    plan = physical_plan(df)
-    out = []
-    for seg in plan.split("PushedFilters: [")[1:]:
-        out.append(seg.split("]", 1)[0])
-    return out
-
-
-def scan_schemas(df: DataFrame) -> list[str]:
-    """Every ``ReadSchema: ...`` scan projection — what actually gets read."""
-    plan = physical_plan(df)
-    return [seg.split("\n", 1)[0].strip() for seg in plan.split("ReadSchema: ")[1:]]
-
-
-def join_kinds(df: DataFrame) -> dict[str, int]:
-    """Counts of each physical join operator in the plan."""
-    plan = physical_plan(df)
-    kinds = [
-        "BroadcastHashJoin",
-        "SortMergeJoin",
-        "ShuffledHashJoin",
-        "BroadcastNestedLoopJoin",
-        "CartesianProduct",
-    ]
-    return {k: plan.count(k) for k in kinds if plan.count(k)}
-
-
 def _indent(line: str) -> int:
     """Depth of a plan line = chars of tree furniture before the operator."""
     return len(line) - len(line.lstrip(" :+-*()0123456789="))

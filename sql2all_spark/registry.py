@@ -19,114 +19,77 @@ from sql2all_spark.cache import release_tracked
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Modules that register queries on import.  ORDER IS LOAD-BEARING: the
-# driver's correctness gate checks the first 50 registered queries
-# (CORRECTNESS_r01 recorded exactly the first 50 in registration order), so
-# queries without a driver-green row on record rotate to the front.  Round-2
-# front window = the 35 round-1-unchecked queries + scalar_funcs (carrying
-# the func_array_family fix) + relational (flagship q1) = exactly 50; the
-# round-1-green joins/aggregates/windows/setops/asof_range rotate behind
-# (their green rows are on record; tools/check.py still covers them locally).
+# Modules that register queries on import.
 _QUERY_MODULES = [
-    # Round-16 front window (positions 1-50; the arithmetic is ENFORCED
-    # by tests/test_registry_window.py, not hand-counted here).  This
-    # round (VERDICT r15 #1): the seven r11-aged queries LEAD — the
-    # curation four + layout_zorder_cluster + pipeline_curation +
-    # profile_corpus, all displaced from the r15 window by late r15
-    # operators (disclosed in NOTES.md) — followed by the oldest r12
-    # block (fuzzy 1, aggregates 14, scalar_funcs 8, windows 6,
-    # ivfpq 5 = 34).  The LATE r16 operators (kn_ccnet, sp_pack,
-    # funnel: 3 new + the sp_loop rider) displaced udfs (2) and
-    # fusion (2) — both r12-aged with green rows on record; they join
-    # similarity (10) at the HEAD of the r17 window (never-attested
-    # elimination outranks soft re-attestation, the r12-r15 precedent).
-    "sql2all_spark.operators.curation",  # r11-aged (4): leads
-    "sql2all_spark.operators.layout",  # r11-aged
-    "sql2all_spark.operators.pipeline",  # r11-aged
-    "sql2all_spark.operators.profiling",  # r11-aged
-    "sql2all_spark.operators.fuzzy",  # oldest r12 block from here
     "sql2all_spark.operators.aggregates",
-    "sql2all_spark.operators.scalar_funcs",
-    "sql2all_spark.operators.windows",
-    "sql2all_spark.operators.ivfpq",
-    # = 41 so far; NEW r16 operators land here, displacing the r13
-    # tail fillers below one-for-one (never-attested elimination
-    # outranks soft re-attestation — the r12-r15 precedent).
-    "sql2all_spark.operators.tau_caps",  # NEW r16: tau x source-caps governance
-    # NEW r16: strip->exact-dedup yield (imports template_strip at module
-    # scope, so r15-green text_template_mining + text_template_strip ride
-    # along and re-attest)
-    "sql2all_spark.operators.strip_dedup",
-    "sql2all_spark.operators.strip_keeper",  # NEW r16: quality keeper leg
-    # NEW r16 (late): CCNet bucketing on the KN trigram score
-    # (kn3_core is non-registering — no rider)
-    "sql2all_spark.operators.kn_ccnet",
-    # NEW r16 (late): sequence packing on trained piece counts; imports
-    # sp_loop at module scope, so r15-green text_sp_unigram_train rides
-    # along and re-attests (the encode builder import is run-time-local)
-    "sql2all_spark.operators.sp_pack",
-    # NEW r16 (late): the strip->dedup->tau->caps funnel capstone
-    # (template_strip already registered via strip_dedup — no rider)
+    "sql2all_spark.operators.ann_batch",
+    "sql2all_spark.operators.ann_multiprobe",
+    "sql2all_spark.operators.asof_range",
+    "sql2all_spark.operators.bitext",
+    "sql2all_spark.operators.bpe_train",
+    "sql2all_spark.operators.bucketing",
+    "sql2all_spark.operators.ccnet",
+    "sql2all_spark.operators.classifier",
+    "sql2all_spark.operators.curation",
+    "sql2all_spark.operators.dedup",
+    "sql2all_spark.operators.domain_label",
+    "sql2all_spark.operators.dsir",
+    "sql2all_spark.operators.embed_screen",
     "sql2all_spark.operators.funnel",
-    # --- position > 50 from here: driver-green rows on record (ledger;
-    # max attestation age r12 after this rotation: similarity's ten +
-    # udfs' two + fusion's two — displaced by the late r16 operators,
-    # they lead the r17 window).  tools/check.py still covers them
-    # locally and the full-tree gates run the whole registry.
-    "sql2all_spark.operators.udfs",  # r12-aged; leads r17 with fusion
-    "sql2all_spark.operators.fusion",  # r12-aged; leads r17 with udfs
-    "sql2all_spark.operators.semdedup",  # r13 filler, displaced (post_strip_keeper)
-    "sql2all_spark.operators.range_search",  # r13 filler, displaced (riders)
-    "sql2all_spark.operators.bpe_train",  # r13 filler, displaced (riders)
-    "sql2all_spark.operators.reservoir",  # r13 filler, displaced (tau_caps)
-    "sql2all_spark.operators.retention",  # r13 filler, displaced (strip_dedup)
+    "sql2all_spark.operators.fusion",
+    "sql2all_spark.operators.fuzzy",
+    "sql2all_spark.operators.graph",
+    "sql2all_spark.operators.incremental",
+    "sql2all_spark.operators.ivfpq",
+    "sql2all_spark.operators.joins",
+    "sql2all_spark.operators.kfold",
+    "sql2all_spark.operators.kn_ccnet",
+    "sql2all_spark.operators.kn_lm",
+    "sql2all_spark.operators.kn_trigram",
+    "sql2all_spark.operators.layout",
+    "sql2all_spark.operators.lm",
+    "sql2all_spark.operators.lm_trigram",
+    "sql2all_spark.operators.mm_cluster",
+    "sql2all_spark.operators.multimodal",
+    "sql2all_spark.operators.novelty",
+    "sql2all_spark.operators.pipeline",
+    "sql2all_spark.operators.pq",
+    "sql2all_spark.operators.pq_train",
+    "sql2all_spark.operators.profiling",
+    "sql2all_spark.operators.quality_profile",
+    "sql2all_spark.operators.range_search",
     "sql2all_spark.operators.relational",
+    "sql2all_spark.operators.reservoir",
+    "sql2all_spark.operators.retention",
     "sql2all_spark.operators.retrieval",
+    "sql2all_spark.operators.sampling",
+    "sql2all_spark.operators.scalar_funcs",
+    "sql2all_spark.operators.semdedup",
+    "sql2all_spark.operators.setops",
+    "sql2all_spark.operators.similarity",
     "sql2all_spark.operators.sketches",
     "sql2all_spark.operators.skew",
-    "sql2all_spark.operators.bucketing",
-    "sql2all_spark.operators.embed_screen",
-    "sql2all_spark.operators.pq_train",
-    "sql2all_spark.operators.kfold",
-    "sql2all_spark.operators.bitext",
-    "sql2all_spark.operators.udf_scalar",
-    "sql2all_spark.operators.ann_batch",
-    "sql2all_spark.operators.joins",
-    "sql2all_spark.operators.tpch_extra",
-    "sql2all_spark.operators.setops",
-    "sql2all_spark.operators.kn_trigram",
-    "sql2all_spark.operators.sp_loop",  # no-op: registered via sp_pack
-    "sql2all_spark.operators.sp_encode",  # after sp_loop (imports it)
-    "sql2all_spark.operators.template_keeper",  # registers template's query too
-    "sql2all_spark.operators.template_strip",
-    "sql2all_spark.operators.quality_profile",
-    "sql2all_spark.operators.tau_apply",
+    "sql2all_spark.operators.sp_encode",
+    "sql2all_spark.operators.sp_loop",
+    "sql2all_spark.operators.sp_pack",
     "sql2all_spark.operators.sp_unigram",
-    "sql2all_spark.operators.domain_label",
-    "sql2all_spark.operators.novelty",
-    "sql2all_spark.operators.template",  # no-op: registered via template_keeper
-    "sql2all_spark.operators.classifier",
-    "sql2all_spark.operators.ccnet",
-    "sql2all_spark.operators.dsir",  # registers text's queries too (import)
-    "sql2all_spark.operators.text",  # no-op: already registered via dsir
-    "sql2all_spark.operators.lm_trigram",  # registers lm's bigram too (import)
-    "sql2all_spark.operators.lm",  # no-op: already registered via lm_trigram
-    "sql2all_spark.operators.kn_lm",
+    "sql2all_spark.operators.strip_dedup",
+    "sql2all_spark.operators.strip_keeper",
     "sql2all_spark.operators.substring_dedup",
-    "sql2all_spark.streaming.batch_twins",
-    "sql2all_spark.operators.ann_multiprobe",
-    "sql2all_spark.operators.pq",
-    "sql2all_spark.operators.tpch",
-    "sql2all_spark.operators.asof_range",
-    "sql2all_spark.operators.dedup",
-    "sql2all_spark.operators.graph",  # imports dedup (already registered)
-    "sql2all_spark.operators.multimodal",
-    "sql2all_spark.operators.mm_cluster",
-    "sql2all_spark.operators.tokenize",
+    "sql2all_spark.operators.tau_apply",
+    "sql2all_spark.operators.tau_caps",
+    "sql2all_spark.operators.template",
+    "sql2all_spark.operators.template_keeper",
+    "sql2all_spark.operators.template_strip",
+    "sql2all_spark.operators.text",
     "sql2all_spark.operators.timeseries",
-    "sql2all_spark.operators.incremental",
-    "sql2all_spark.operators.sampling",
-    "sql2all_spark.operators.similarity",  # r12-aged; LEADS the r17 window
+    "sql2all_spark.operators.tokenize",
+    "sql2all_spark.operators.tpch",
+    "sql2all_spark.operators.tpch_extra",
+    "sql2all_spark.operators.udf_scalar",
+    "sql2all_spark.operators.udfs",
+    "sql2all_spark.operators.windows",
+    "sql2all_spark.streaming.batch_twins",
 ]
 
 
@@ -165,9 +128,9 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
             )
 
         # Release the PREVIOUS query's tracked persisted intermediates
-        # before building this one: multi-query runners (the driver gate
-        # runs ~50 queries in one session) would otherwise accumulate
-        # cached blocks until the local-mode heap fills (the r7 sf1 OOM).
+        # before building this one: multi-query runners (the driver gate,
+        # bench.py) would otherwise accumulate cached blocks until the
+        # local-mode heap fills (the r7 sf1 OOM).
         # Unpersist never invalidates a plan, so this is correctness-safe
         # even for build-all-then-execute consumers — they just recompute.
         @functools.wraps(fn)

@@ -76,31 +76,39 @@ def write_output(
         if fmt in ("arrow",):
             raise ValueError("partition_by is not supported for arrow output")
         writer = writer.partitionBy(*partition_by)
-    if fmt == "arrow" and not single_file:
+    if fmt in ("arrow", "lance"):
+        if options:
+            raise ValueError(
+                f"{fmt} output does not accept writer options: "
+                f"{sorted(options)}"
+            )
+        # lance versions its dataset, so overwrite is left to write_dataset
+        if not _claim_output(output, mode, fmt, clear=fmt == "arrow"):
+            return output
+        if fmt == "lance":
+            # reference roadmap format (README.md:29-31); columnar+vector-
+            # index store — needs the optional `lance` package
+            try:
+                import lance
+            except ImportError as e:
+                raise ValueError(
+                    "lance output needs the 'pylance' package (pip install pylance)"
+                ) from e
+            lance.write_dataset(out.toArrow(), output, mode="overwrite")
+            return output
+        if single_file:
+            # exactly one IPC file, reference-style, written on the driver
+            import pyarrow as pa
+            import pyarrow.ipc as ipc
+
+            tbl = out.toArrow()
+            with pa.OSFile(output, "wb") as f, ipc.new_file(f, tbl.schema) as w:
+                w.write_table(tbl)
+            return output
         # Distributed Arrow IPC writer (reference declares arrow output but
         # panics, lib.rs:138): one IPC file per partition written FROM THE
         # EXECUTORS via mapInArrow — no driver materialization, scales with
-        # the cluster like any file sink.  single_file=True keeps the exact
-        # one-file layout of the reference's other sinks (driver-side).
-        import os
-        import shutil
-
-        if options:
-            raise ValueError(
-                f"arrow output does not accept writer options: {sorted(options)}"
-            )
-        if mode == "append":
-            raise ValueError("mode='append' is not supported for arrow output")
-        if os.path.exists(output):
-            if mode == "ignore":
-                return output
-            if mode in ("error", "errorifexists"):
-                raise ValueError(f"output path already exists: {output!r}")
-            # overwrite: clear stale part files from any previous write
-            if os.path.isdir(output):
-                shutil.rmtree(output)
-            else:
-                os.remove(output)
+        # the cluster like any file sink.
         return _write_arrow_ipc_dir(out, output)
     if fmt == "csv":
         writer = writer.option("header", "true")
@@ -123,46 +131,6 @@ def write_output(
             tw = tw.partitionBy(*pcols)
         tw.text(output)
         return output
-    if fmt in ("arrow", "lance"):
-        # Driver-side writers: honor the mode argument explicitly instead of
-        # silently clobbering (append has no meaning for a single IPC file /
-        # driver-side lance write — reject rather than surprise).
-        import os
-
-        if options:
-            raise ValueError(
-                f"{fmt} output does not accept writer options: "
-                f"{sorted(options)}"
-            )
-        if mode == "append":
-            raise ValueError(f"mode='append' is not supported for {fmt} output")
-        if os.path.exists(output):
-            if mode == "ignore":
-                return output
-            if mode in ("error", "errorifexists"):
-                raise ValueError(f"output path already exists: {output!r}")
-        # mode == "overwrite" falls through to the write below
-    if fmt == "lance":
-        # reference roadmap format (README.md:29-31); columnar+vector-index
-        # store — needs the optional `lance` package
-        try:
-            import lance  # noqa: F401
-        except ImportError as e:
-            raise ValueError(
-                "lance output needs the 'pylance' package (pip install pylance)"
-            ) from e
-        lance.write_dataset(out.toArrow(), output, mode="overwrite")
-        return output
-    if fmt == "arrow":
-        # single_file=True path: exactly one IPC file, reference-style
-        # (the distributed per-partition writer above is the default).
-        import pyarrow as pa
-        import pyarrow.ipc as ipc
-
-        tbl = out.toArrow()
-        with pa.OSFile(output, "wb") as f, ipc.new_file(f, tbl.schema) as w:
-            w.write_table(tbl)
-        return output
     for k, v in options.items():
         writer = writer.option(k, v)
     try:
@@ -172,7 +140,7 @@ def write_output(
             # spark-avro is an external jar; without it, fall back to the
             # self-contained driver-side container-file writer (same
             # interchange-only contract as the arrow path above)
-            from sql2all_spark.sinks.avro_io import write_output_avro
+            from sql2all_spark.sinks.avro_io import write_avro
 
             if options:
                 raise ValueError(
@@ -185,9 +153,38 @@ def write_output(
                     "partition_by for avro needs the spark-avro package "
                     "(distributed writer)"
                 ) from e
-            return write_output_avro(out, output, mode)
+            if not _claim_output(output, mode, fmt):
+                return output
+            return write_avro(out, output)
         raise
     return output
+
+
+def _claim_output(output: str, mode: str, fmt: str, clear: bool = True) -> bool:
+    """Save-mode policy for the writers Spark does not manage (arrow, lance,
+    the driver-side avro fallback).  Returns False when ``mode='ignore'``
+    finds ``output`` already there.  ``append`` is rejected (no meaning for
+    a single IPC/avro file or a driver-side lance write), ``error`` /
+    ``errorifexists`` raise on an existing path, and ``overwrite`` removes
+    an existing file or directory first — whichever layout the previous
+    write left — unless ``clear=False``."""
+    import os
+    import shutil
+
+    if mode == "append":
+        raise ValueError(f"mode='append' is not supported for {fmt} output")
+    if not os.path.exists(output):
+        return True
+    if mode == "ignore":
+        return False
+    if mode in ("error", "errorifexists"):
+        raise ValueError(f"output path already exists: {output!r}")
+    if clear:
+        if os.path.isdir(output):
+            shutil.rmtree(output)
+        else:
+            os.remove(output)
+    return True
 
 
 def _write_arrow_ipc_dir(df: DataFrame, output: str) -> str:

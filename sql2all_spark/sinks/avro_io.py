@@ -398,14 +398,3 @@ def _reader_spark_schema(parsed: dict):
         fields.append(T.StructField(f["name"], dt, nullable))
     return T.StructType(fields)
 
-
-def write_output_avro(df, output: str, mode: str) -> str:
-    """Mode-honoring driver-side Avro write (mirrors the arrow path)."""
-    if mode == "append":
-        raise ValueError("mode='append' is not supported for avro output")
-    if os.path.exists(output):
-        if mode == "ignore":
-            return output
-        if mode in ("error", "errorifexists"):
-            raise ValueError(f"output path already exists: {output!r}")
-    return write_avro(df, output)

@@ -8,7 +8,11 @@ registration so every operator builder and the SQL surface share one loader.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +31,25 @@ TABLE_NAMES = [
 ]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Operator-written files (bucketed tables, stored ANN/IVFPQ indexes) live
+# in a PRIVATE per-process tempdir (mkdtemp: mode 0700, unpredictable
+# suffix), not a fixed world-writable /tmp path — a fixed path lets
+# concurrent sessions on the same sf_dir clobber each other's files
+# mid-query and trusts a pre-existing attacker-created directory.
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_LOCK = threading.Lock()
+
+
+def scratch_root() -> str:
+    """This process's scratch directory, created on first use and
+    removed at interpreter exit."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:  # writers on several driver threads share one root
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="sql2all_spark_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+        return _SCRATCH_ROOT
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -84,12 +107,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # nanos conf is in the key because it changes how TIMESTAMP(NANOS)
 # columns type.
 _SCHEMA_CACHE: dict = {}
-
-
-def clear_schema_cache() -> None:
-    """Drop cached inferred schemas (tests that mutate parquet fixtures or
-    reconfigure sessions mid-process call this; normal flows never need to)."""
-    _SCHEMA_CACHE.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

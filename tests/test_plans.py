@@ -178,7 +178,7 @@ def test_ann_indexed_scan_partition_prunes(spark, sf_dir):
     import glob
     import re
 
-    from sql2all_spark.operators.similarity import ANN_INDEX_ROOT
+    from sql2all_spark.operators.similarity import ann_index_root
     from sql2all_spark.plans import physical_plan
 
     # build ONCE: each build rewrites the index dir (overwrite), which
@@ -190,7 +190,7 @@ def test_ann_indexed_scan_partition_prunes(spark, sf_dir):
     assert m, plan
     assert "bucket" in m.group(1) and "=" in m.group(1), m.group(1)
     # the index has many bucket dirs; the query touches exactly one
-    buckets = glob.glob(f"{ANN_INDEX_ROOT}/*/bucket=*")
+    buckets = glob.glob(f"{ann_index_root()}/*/bucket=*")
     assert len(buckets) > 10  # 64 possible signatures, most non-empty
     rows = df.collect()
     assert len(rows) > 0
@@ -1197,10 +1197,7 @@ def test_ivfpq_indexed_scan_partition_prunes_and_is_join_free(spark, sf_dir):
     import glob
     import re
 
-    from sql2all_spark.operators.ivfpq import (
-        IVFPQ_INDEX_ROOT,
-        IVFPQ_NPROBE,
-    )
+    from sql2all_spark.operators.ivfpq import IVFPQ_NPROBE, ivfpq_index_root
     from sql2all_spark.plans import physical_plan
 
     df = all_specs()["sim_ivfpq_indexed_query"].builder(spark, sf_dir)
@@ -1212,7 +1209,7 @@ def test_ivfpq_indexed_scan_partition_prunes_and_is_join_free(spark, sf_dir):
     assert "Exchange" not in plan
     assert plan.count("TakeOrderedAndProject") == 2
     # the index materialized all 8 cell dirs; the query touched nprobe
-    cells = glob.glob(f"{IVFPQ_INDEX_ROOT}/*.parquet/cent_id=*")
+    cells = glob.glob(f"{ivfpq_index_root()}/*.parquet/cent_id=*")
     assert len({c.rsplit("=", 1)[1] for c in cells}) == 8
     rows = df.collect()
     assert len(rows) == 10

@@ -106,6 +106,34 @@ def test_arrow_ipc_single_file(spark, sample, tmp_path):
     assert tbl.column_names == ["id", "name", "score"]
 
 
+def test_arrow_single_file_overwrites_directory(spark, sample, tmp_path):
+    """Overwriting a path a distributed arrow write left as a directory
+    with a single-file write replaces the directory with one IPC file."""
+    import pyarrow.ipc as ipc
+
+    out = str(tmp_path / "x.arrow")
+    write_output(spark.range(0, 10).repartition(2), out)
+    assert (tmp_path / "x.arrow").is_dir()
+    write_output(sample, out, single_file=True)
+    with ipc.open_file(out) as reader:
+        assert reader.read_all().num_rows == 3
+
+
+def test_arrow_directory_overwrites_single_file(spark, sample, tmp_path):
+    """The reverse: a distributed write over a single IPC file replaces
+    the file with a part-file directory holding only the new rows."""
+    import glob
+
+    import pyarrow.ipc as ipc
+
+    out = str(tmp_path / "x.arrow")
+    write_output(sample, out, single_file=True)
+    assert (tmp_path / "x.arrow").is_file()
+    write_output(spark.range(0, 10).repartition(2), out)
+    parts = glob.glob(out + "/part-*.arrow")
+    assert sum(ipc.open_file(p).read_all().num_rows for p in parts) == 10
+
+
 def test_arrow_ipc_filtered_not_null_column(spark, sf_dir, tmp_path):
     """A filtered column arrives at the executor as ``not null`` while the
     driver schema says nullable; the writer must conform every batch to

@@ -30,7 +30,7 @@ RNG — so the scale-up is bit-reproducible.
 
 Usage:
   python tools/gen_scale.py [--src /root/testdata/sf0.1]
-                            [--out /root/repo/.testdata_sf1] [--tiles 10]
+                            [--out REPO/.testdata_sf1] [--tiles 10]
 """
 
 from __future__ import annotations
@@ -41,6 +41,8 @@ import os
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DIM_TABLES = ["region", "nation"]
 
@@ -120,7 +122,7 @@ def _tile(
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/.testdata_sf1")
+    ap.add_argument("--out", default=os.path.join(REPO, ".testdata_sf1"))
     ap.add_argument("--tiles", type=int, default=10)
     args = ap.parse_args()
 

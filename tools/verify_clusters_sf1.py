@@ -28,7 +28,7 @@ validation chain ``verify_pack_sf1.py`` uses.
 Patches the three entries into ``--json-out`` with ``method: replay``.
 
 Usage:
-  python tools/verify_clusters_sf1.py [--sf-dir /root/repo/.testdata_sf1]
+  python tools/verify_clusters_sf1.py [--sf-dir REPO/.testdata_sf1]
                                       [--json-out CHECK_FULL_r9_sf1.json]
   python tools/verify_clusters_sf1.py --sf-dir /root/testdata/sf0.01 --validate
 """
@@ -43,7 +43,8 @@ import time
 
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _find(parent: dict, x: int) -> int:
@@ -146,7 +147,7 @@ def frame_key(df: pd.DataFrame) -> list[tuple]:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/repo/.testdata_sf1")
+    ap.add_argument("--sf-dir", default=os.path.join(REPO, ".testdata_sf1"))
     ap.add_argument("--json-out", default=None)
     ap.add_argument(
         "--validate",

@@ -14,7 +14,7 @@ Appends/overwrites the ``text_pack_sequences`` entry in the given
 ``--json-out`` artifact with ``method: python-replay`` so the record is
 explicit about which verification form ran at this scale.
 
-Usage: python tools/verify_pack_sf1.py [--sf-dir /root/repo/.testdata_sf1]
+Usage: python tools/verify_pack_sf1.py [--sf-dir REPO/.testdata_sf1]
                                        [--json-out CHECK_FULL_r7_sf1.json]
 """
 
@@ -22,13 +22,15 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
 import pandas as pd
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 PACK_CAP = 256  # mirrors operators/text.py:PACK_CAP
 
@@ -68,7 +70,7 @@ def expected_packs(sf_dir: str) -> pd.DataFrame:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/repo/.testdata_sf1")
+    ap.add_argument("--sf-dir", default=os.path.join(REPO, ".testdata_sf1"))
     ap.add_argument("--json-out", default=None)
     args = ap.parse_args()
 

@@ -23,7 +23,7 @@ sf0.01) and asserts the replay reproduces it exactly.
 Patches the entry into ``--json-out`` with ``method: replay``.
 
 Usage:
-  python tools/verify_phash_clusters_sf1.py [--sf-dir /root/repo/.testdata_sf1]
+  python tools/verify_phash_clusters_sf1.py [--sf-dir REPO/.testdata_sf1]
                                             [--json-out CHECK_FULL_r10_sf1.json]
   python tools/verify_phash_clusters_sf1.py --sf-dir /root/testdata/sf0.01 --validate
 """
@@ -32,12 +32,14 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from verify_clusters_sf1 import components, frame_key  # noqa: E402
 
@@ -60,7 +62,7 @@ def expected_frame(con) -> pd.DataFrame:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/repo/.testdata_sf1")
+    ap.add_argument("--sf-dir", default=os.path.join(REPO, ".testdata_sf1"))
     ap.add_argument("--json-out", default=None)
     ap.add_argument(
         "--validate",
