@@ -1,9 +1,11 @@
 """Shared product-quantization math (non-registering).
 
-``operators/pq.py`` (single-refinement PQ+ADC), ``operators/pq_train.py``
-(looped codebook training) and ``operators/ivfpq.py`` (IVF-routed PQ)
-all build on the same subspace/codebook/ADC pieces.  This module holds
-the shared math and registers NOTHING.
+``operators/pq.py`` (PQ+ADC with 1 or ``PQ_TRAIN_ROUNDS`` training
+rounds) and ``operators/ivfpq.py`` (IVF-routed PQ) build on the same
+subspace/codebook/ADC pieces.  Codebook training has exactly one
+definition per engine: :func:`train_codebook` on Spark and
+:func:`train_codebook_ctes` (over :func:`subvector_ctes`) as its DuckDB
+twin.  This module registers NOTHING.
 
 All helpers follow the cross-engine determinism discipline
 (functions/embed.py): distances fold left-to-right over double-cast
@@ -23,6 +25,7 @@ PQ_M = 16  # subspaces
 PQ_SUB = DIM // PQ_M  # dims per subspace (4)
 PQ_K = 16  # centroids per subspace codebook
 PQ_SEED_IDS = list(range(1, PQ_K + 1))  # deterministic codebook seeds
+PQ_CODEBOOK_SCHEMA = "m int, c int, cv array<double>"
 
 
 def dist2(a: Column, b: Column) -> Column:
@@ -136,9 +139,70 @@ def recompute_codebook(member: DataFrame) -> DataFrame:
     )
 
 
-def refined_codebook(subs: DataFrame) -> DataFrame:
-    """cb1 (m, c, cv): one k-means refinement round over the seeds."""
-    return recompute_codebook(assign_nearest(subs, seed_codebook(subs)))
+def train_codebook(subs: DataFrame, rounds: int) -> DataFrame:
+    """(m, c, cv): the seed codebook refined by ``rounds`` k-means
+    assign→recompute rounds (``rounds=0`` returns the seeds).
+
+    Each round's 256-row codebook is collected and re-enters as a
+    LITERAL frame: lineage never grows, every round's physical plan is
+    identical (pinned by tests/test_plans.py), and every consumer of the
+    result (encode and ADC broadcasts, the index sidecar write) reads
+    the rows instead of re-running training.  A 256-row collect is an
+    O(1) driver scalar (the bpe_train merge-argmax precedent); the
+    collected doubles are the exact 6dp-rounded means, so the literal
+    frame is value-identical to the lazy chain."""
+    spark = subs.sparkSession
+    cb = seed_codebook(subs)
+    for _ in range(rounds):
+        cb_rows = recompute_codebook(assign_nearest(subs, cb)).collect()
+        cb = spark.createDataFrame(cb_rows, PQ_CODEBOOK_SCHEMA)
+    return cb
+
+
+def subvector_ctes(name: str, src: str, key: str = "vec_id") -> str:
+    """DuckDB twin of :func:`subvector_frame`: the CTE ``name(key, m, sv)``
+    slicing ``src``'s double array ``v`` into ``PQ_M`` subvectors."""
+    return f"""{name} AS (
+  SELECT {key}, m,
+         list_slice(v, m * {PQ_SUB} + 1, (m + 1) * {PQ_SUB}) AS sv
+  FROM {src}, (SELECT UNNEST(range(0, {PQ_M})) AS m)
+)"""
+
+
+def train_codebook_ctes(subs: str, rounds: int) -> str:
+    """DuckDB twin of :func:`train_codebook` over the subvector CTE
+    ``subs``: the seeded ``cb0(m, c, cv0)`` plus ``rounds`` unrolled
+    ``a{k}`` (assign against ``cb{k-1}``) / ``cb{k}`` (per-dim
+    DECIMAL(28,12) means rounded to 6dp) pairs, ending in
+    ``cb{rounds}(m, c, cv{rounds})``.  The ``a{k}``/``cb{k}`` names stay
+    clear of the IVF oracles' ``vecs``/``cents``/``assign``/``cells``."""
+    seeds = ", ".join(str(i) for i in PQ_SEED_IDS)
+    ctes = [f"""cb0 AS (
+  SELECT s.m, ROW_NUMBER() OVER (PARTITION BY s.m ORDER BY s.vec_id) - 1 AS c,
+         s.sv AS cv0
+  FROM {subs} s WHERE s.vec_id IN ({seeds})
+)"""]
+    for k in range(1, rounds + 1):
+        d2k = dist2_sql("s.sv", f"c.cv{k - 1}")
+        ctes.append(f"""a{k} AS (
+  SELECT s.vec_id, s.m, s.sv, c.c,
+         ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
+                            ORDER BY ROUND({d2k}, 6) ASC, c.c ASC) AS rk
+  FROM {subs} s JOIN cb{k - 1} c ON s.m = c.m
+),
+cb{k} AS (
+  SELECT m, c, list(mean_val ORDER BY dim) AS cv{k}
+  FROM (
+    SELECT m, c, dim,
+           ROUND(CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE)
+                 / COUNT(*), 6) AS mean_val
+    FROM (
+      SELECT m, c, UNNEST(range(1, {PQ_SUB} + 1)) AS dim, UNNEST(sv) AS val
+      FROM a{k} WHERE rk = 1
+    ) GROUP BY m, c, dim
+  ) GROUP BY m, c
+)""")
+    return ",\n".join(ctes)
 
 
 def encode(subs: DataFrame, cb: DataFrame) -> DataFrame:

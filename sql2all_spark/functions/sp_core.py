@@ -2,12 +2,16 @@
 
 Extracted from ``operators/sp_unigram.py`` so the multi-round EM+prune
 LOOP operator (``operators/sp_loop.py``) can compose the seed chain, the
-Viterbi E-step and the unrolled-DP oracle CTE generators WITHOUT
-importing the registering operator module.  All semantics documented
-in operators/sp_unigram.py's module docstring.
+Viterbi E-step, the prune step and the unrolled-DP/prune oracle CTE
+generators WITHOUT importing the registering operator module.  The
+prune step has one definition per engine (:func:`_prune_round`,
+:func:`_prune_ctes`), shared by the single prune round and the loop.
+All semantics documented in operators/sp_unigram.py's module docstring.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -147,6 +151,43 @@ vc AS MATERIALIZED (
 )"""
 
 
+def _prune_ctes(src_em: str, keep: int, tag: str) -> str:
+    """One prune block (the SQL twin of :func:`_prune_round`): top-``keep``
+    of ``src_em`` by EM count + all single characters,
+    Laplace(+1)-renormalized costs -> ``vc{tag}`` (the cost table the
+    next ``_dp_em_ctes(tag)`` chain consumes).  Shared by the single
+    prune round's oracle and every round of the loop's."""
+    return f"""keep{tag} AS (
+  SELECT piece FROM (
+    SELECT piece,
+           ROW_NUMBER() OVER (
+             ORDER BY em_count DESC NULLS LAST, piece ASC NULLS FIRST
+           ) AS rn
+    FROM {src_em}
+  ) WHERE rn <= {keep}
+),
+surv{tag} AS (
+  SELECT piece FROM keep{tag}
+  UNION
+  SELECT piece FROM vc WHERE LENGTH(piece) = 1
+),
+em0{tag} AS (
+  SELECT s.piece, COALESCE(e.em_count, 0) AS em
+  FROM surv{tag} s LEFT JOIN {src_em} e USING (piece)
+),
+tot2{tag} AS (
+  SELECT CAST(SUM(em) AS DOUBLE) AS t, CAST(COUNT(*) AS DOUBLE) AS v
+  FROM em0{tag}
+),
+vc{tag} AS MATERIALIZED (
+  SELECT piece,
+         CAST(FLOOR({SP_SCALE}.0
+                    * -LN((CAST(em AS DOUBLE) + 1.0) / (t + v)) + 0.5)
+              AS BIGINT) AS cost
+  FROM em0{tag}, tot2{tag}
+)"""
+
+
 def segment_words(words: DataFrame, costs: dict[str, int]) -> DataFrame:
     """(word, c, seg): Viterbi-segment every distinct word under
     ``costs`` (Arrow-batched pandas UDF, row-local, shuffle-free) —
@@ -174,6 +215,43 @@ def _segment_em(words: DataFrame, costs: dict[str, int]) -> DataFrame:
         F.sum(F.col("k") * F.col("c")).cast("long").alias("em_count"),
         F.count(F.lit(1)).alias("n_words"),
     )
+
+
+def _prune_round(
+    spark: SparkSession, em: DataFrame, keep: int, singles: Iterable[str]
+) -> tuple[dict[str, int], DataFrame, dict[str, int]]:
+    """One prune step, the Spark twin of :func:`_prune_ctes`: collect the
+    EM ledger ``em`` (bounded: <= previous survivors + alphabet rows),
+    keep the top-``keep`` pieces by (em_count DESC, piece ASC) plus every
+    piece in ``singles``, and Laplace(+1)-renormalize their costs.
+    Returns ``(em_map, vc, costs)``: the collected EM counts, the cost
+    table frame and its collected dict.
+
+    The totals t = SUM(em), v = COUNT(*) are exact integers computed
+    driver-side (Python int sum == Spark's long sum, both cast to the
+    identical double); only the -LN stays engine-side (Spark ln — the
+    FLOOR quantization discipline shared with the oracle), so the cost
+    table is ONE local single-stage job instead of createDataFrame ->
+    agg -> broadcast-join -> collect."""
+    em_rows = em.collect()
+    em_map = {r["piece"]: r["em_count"] for r in em_rows}
+    kept = sorted(em_rows, key=lambda r: (-r["em_count"], r["piece"]))
+    survivors = {r["piece"] for r in kept[:keep]} | set(singles)
+    em0_rows = sorted((p, em_map.get(p, 0)) for p in survivors)
+    tv = float(sum(n for _, n in em0_rows)) + float(len(em0_rows))
+    em0 = spark.createDataFrame(em0_rows, "piece string, em long")
+    vc = em0.select(
+        "piece",
+        F.floor(
+            F.lit(float(SP_SCALE))
+            * -F.log((F.col("em").cast("double") + F.lit(1.0)) / F.lit(tv))
+            + F.lit(0.5)
+        )
+        .cast("long")
+        .alias("cost"),
+    )
+    costs = {r["piece"]: r["cost"] for r in vc.collect()}
+    return em_map, vc, costs
 
 
 def _distinct_words(spark: SparkSession, sf_dir: str) -> DataFrame:

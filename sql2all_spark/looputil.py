@@ -34,9 +34,9 @@ partitioning derived from input size, never a constant tuned for one
 deployment), sets it for the duration of the loop, and restores the
 session value afterwards:
 
-    partitions = clamp(ceil(rows / rows_per_partition), floor, session)
+    partitions = clamp(ceil(rows / LOOP_ROWS_PER_PARTITION), floor, session)
 
-- ``rows_per_partition`` defaults to 4M slim rows (~64 MB of 16-byte
+- ``LOOP_ROWS_PER_PARTITION`` is 4M slim rows (~64 MB of 16-byte
   edge rows — the guide §2.2 100 MB-1 GB band's low end, right for
   frames that are re-shuffled every round).
 - The result is CAPPED at the session value: on a cluster where the
@@ -89,10 +89,7 @@ def collect_if_bounded(state: DataFrame) -> list[Row] | None:
 
 
 @contextmanager
-def loop_shuffle_partitions(
-    materialized: DataFrame,
-    rows_per_partition: int = LOOP_ROWS_PER_PARTITION,
-) -> Iterator[int]:
+def loop_shuffle_partitions(materialized: DataFrame) -> Iterator[int]:
     """Scope the session's shuffle width to one derived from
     ``materialized``'s row count (the frame must already be persisted or
     checkpointed — the count is then a cheap cached-block scan, not a
@@ -103,7 +100,7 @@ def loop_shuffle_partitions(
     n_rows = materialized.count()
     derived = max(
         LOOP_MIN_PARTITIONS,
-        -(-n_rows // rows_per_partition),  # ceil div
+        -(-n_rows // LOOP_ROWS_PER_PARTITION),  # ceil div
     )
     parts = min(session_parts, derived)
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))

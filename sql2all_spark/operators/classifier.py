@@ -4,7 +4,7 @@ quality-filter training stand-in (Joulin et al. 2017 train a linear
 text classifier; DCLM and FineWeb train quality filters over doc
 features and score the whole corpus with them).
 
-Loop discipline (the pq_train / bpe_train pattern): the feature frame
+Loop discipline (the PQ-codebook / bpe_train pattern): the feature frame
 is computed once and persisted; each GD round is ONE slim aggregate —
 per-feature gradient sums in DECIMAL(28,12) (order-free, exact) — whose
 4 updated weights are collected and re-entered as LITERALS, so every

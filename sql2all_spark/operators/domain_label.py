@@ -10,7 +10,7 @@ mixture.  This operator is that assignment pass:
    label and dimension through DECIMAL(28,12) sums (order-free) with
    ROUND(·,6) means — a k×dim frame (10×64 here) that is broadcast, the
    sim_kmeans_iteration recompute shape.  Production computes this once
-   from the labeled seed set and stores it (the pq_train codebook
+   from the labeled seed set and stores it (the PQ codebook
    pattern); corpus size only enters through the seed scan.
 2. **Assignment** — every embedding crosses the BROADCAST centroid set
    (k rows — no shuffle of the corpus) and takes its argmax-cosine

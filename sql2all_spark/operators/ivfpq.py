@@ -49,9 +49,9 @@ from pyspark.sql import functions as F
 from sql2all_spark.cache import materialize_tracked, persist_tracked
 from sql2all_spark.functions.embed import DIM, dbl
 from sql2all_spark.functions.pqmath import (
+    PQ_CODEBOOK_SCHEMA,
     PQ_K,
     PQ_M,
-    PQ_SEED_IDS,
     PQ_SUB,
     adc_score,
     adc_table,
@@ -59,8 +59,10 @@ from sql2all_spark.functions.pqmath import (
     dist2_sql,
     encode,
     packed_codes,
-    refined_codebook,
+    subvector_ctes,
     subvector_frame,
+    train_codebook,
+    train_codebook_ctes,
 )
 from sql2all_spark.registry import register
 from sql2all_spark.tables import load_table, scratch_root
@@ -98,8 +100,6 @@ cells AS (SELECT vec_id, label, v, cent_id FROM assign WHERE rk = 1)"""
 
 
 def _ivfpq_oracle() -> str:
-    seeds = ", ".join(str(i) for i in PQ_SEED_IDS)
-    d2c = dist2_sql("s.sv", "c.cv")
     d2r = dist2_sql("s.sv", "c.cv1")
     qd2 = dist2_sql("q.sv", "c.cv1")
     full = dist2_sql("d.v", "qv.v", DIM)
@@ -114,36 +114,8 @@ cand AS (
   FROM cells c JOIN probes p USING (cent_id)
   WHERE c.vec_id <> {IVFPQ_PROBE_ID}
 ),
-subs AS (
-  SELECT vec_id, m,
-         list_slice(v, m * {PQ_SUB} + 1, (m + 1) * {PQ_SUB}) AS sv
-  FROM vecs, (SELECT UNNEST(range(0, {PQ_M})) AS m)
-),
-cb0 AS (
-  SELECT s.m, ROW_NUMBER() OVER (PARTITION BY s.m ORDER BY s.vec_id) - 1 AS c,
-         s.sv AS cv
-  FROM subs s WHERE s.vec_id IN ({seeds})
-),
-assign0 AS (
-  SELECT s.vec_id, s.m, s.sv, c.c,
-         ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-                            ORDER BY ROUND({d2c}, 6) ASC, c.c ASC) AS rk
-  FROM subs s JOIN cb0 c ON s.m = c.m
-),
-member AS (SELECT vec_id, m, sv, c FROM assign0 WHERE rk = 1),
-dims AS (
-  SELECT m, c, UNNEST(range(1, {PQ_SUB} + 1)) AS dim, UNNEST(sv) AS val
-  FROM member
-),
-cb1 AS (
-  SELECT m, c, list(mean_val ORDER BY dim) AS cv1
-  FROM (
-    SELECT m, c, dim,
-           ROUND(CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE)
-                 / COUNT(*), 6) AS mean_val
-    FROM dims GROUP BY m, c, dim
-  ) GROUP BY m, c
-),
+{subvector_ctes("subs", "vecs")},
+{train_codebook_ctes("subs", 1)},
 enc AS (
   SELECT s.vec_id, s.m, c.c,
          ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
@@ -268,11 +240,9 @@ def ivfpq_topk_impl(
         F.broadcast(probes), "cent_id"
     )
     subs = subvector_frame(vecs).transform(persist_tracked)
-    # persisted (guide §5): the trained 256-row codebook is consumed by
-    # BOTH the encode broadcast and the ADC-table broadcast — without
-    # the cache each broadcast build re-runs the whole training chain
-    # (seed + assign + recompute over the full subvector frame).
-    cb1 = refined_codebook(subs).transform(materialize_tracked)
+    # the trained codebook is a collected literal: the encode broadcast
+    # and the ADC-table broadcast both read its 256 rows, never retrain
+    cb1 = train_codebook(subs, 1)
     # encode ONLY the probed cells' members: the candidate id set prunes
     # the subvector frame before any codebook work (at scale: a partition-
     # pruned scan of the stored code table)
@@ -412,8 +382,6 @@ def batch_routes(vecs: DataFrame, nprobe: int) -> DataFrame:
 
 
 def _residual_oracle() -> str:
-    seeds = ", ".join(str(i) for i in PQ_SEED_IDS)
-    d2c = dist2_sql("s.sv", "c.cv")
     d2r = dist2_sql("s.sv", "c.cv1")
     qd2 = dist2_sql("p.sv", "c.cv1")
     full = dist2_sql("d.v", "qv.v", DIM)
@@ -434,36 +402,8 @@ res AS (
   SELECT c.vec_id, {sub_res} AS v
   FROM cells c JOIN cents ct USING (cent_id)
 ),
-rsubs AS (
-  SELECT vec_id, m,
-         list_slice(v, m * {PQ_SUB} + 1, (m + 1) * {PQ_SUB}) AS sv
-  FROM res, (SELECT UNNEST(range(0, {PQ_M})) AS m)
-),
-cb0 AS (
-  SELECT s.m, ROW_NUMBER() OVER (PARTITION BY s.m ORDER BY s.vec_id) - 1 AS c,
-         s.sv AS cv
-  FROM rsubs s WHERE s.vec_id IN ({seeds})
-),
-assign0 AS (
-  SELECT s.vec_id, s.m, s.sv, c.c,
-         ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-                            ORDER BY ROUND({d2c}, 6) ASC, c.c ASC) AS rk
-  FROM rsubs s JOIN cb0 c ON s.m = c.m
-),
-member AS (SELECT vec_id, m, sv, c FROM assign0 WHERE rk = 1),
-dims AS (
-  SELECT m, c, UNNEST(range(1, {PQ_SUB} + 1)) AS dim, UNNEST(sv) AS val
-  FROM member
-),
-cb1 AS (
-  SELECT m, c, list(mean_val ORDER BY dim) AS cv1
-  FROM (
-    SELECT m, c, dim,
-           ROUND(CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE)
-                 / COUNT(*), 6) AS mean_val
-    FROM dims GROUP BY m, c, dim
-  ) GROUP BY m, c
-),
+{subvector_ctes("rsubs", "res")},
+{train_codebook_ctes("rsubs", 1)},
 enc AS (
   SELECT s.vec_id, s.m, c.c,
          ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
@@ -481,11 +421,7 @@ prres AS (
   FROM probes pr JOIN cents ct USING (cent_id)
   CROSS JOIN (SELECT v FROM vecs WHERE vec_id = {IVFPQ_PROBE_ID}) q
 ),
-psubs AS (
-  SELECT cent_id, m,
-         list_slice(v, m * {PQ_SUB} + 1, (m + 1) * {PQ_SUB}) AS sv
-  FROM prres, (SELECT UNNEST(range(0, {PQ_M})) AS m)
-),
+{subvector_ctes("psubs", "prres", key="cent_id")},
 padc AS (
   SELECT p.cent_id, p.m, c.c, ROUND({qd2}, 6) AS qd2
   FROM psubs p JOIN cb1 c ON p.m = c.m
@@ -557,9 +493,7 @@ def ivfpq_residual_impl(
         "vec_id", _residual(F.col("v"), F.col("cv")).alias("v")
     )
     rsubs = subvector_frame(res).transform(persist_tracked)
-    # persisted: consumed by the encode broadcast AND the per-cell ADC
-    # broadcast — one training run instead of two (guide §5).
-    cb1 = refined_codebook(rsubs).transform(materialize_tracked)
+    cb1 = train_codebook(rsubs, 1)
     codes = encode(rsubs.join(cand.select("vec_id"), "vec_id"), cb1)
     codesc = codes.join(cand.select("vec_id", "cent_id"), "vec_id")
     # per-probed-cell ADC table: the probe's residual w.r.t. EACH probed
@@ -702,11 +636,11 @@ def build_ivfpq_index(
     cents = tvecs.filter(F.col("vec_id").isin(IVFPQ_CENT_IDS)).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
     ).transform(materialize_tracked)
-    # persisted (guide §5): cb feeds the encode broadcast AND the
-    # codebook sidecar write; cents feeds the routing broadcast AND the
-    # centroid sidecar write — without the caches the training chain and
-    # the centroid scan each execute twice per build.
-    cb = refined_codebook(subvector_frame(tvecs)).transform(materialize_tracked)
+    # persisted (guide §5): cents feeds the routing broadcast AND the
+    # centroid sidecar write — without the cache the centroid scan
+    # executes twice per build.  cb is a collected literal (it feeds the
+    # encode broadcast AND the codebook sidecar write without retraining).
+    cb = train_codebook(subvector_frame(tvecs), 1)
     cells, _ = _route_cells(vecs, cents=cents)
     codes = packed_codes(subvector_frame(vecs), cb)
     idx = cells.join(codes, "vec_id").select(
@@ -733,7 +667,7 @@ def refresh_ivfpq_index(
     batch touches.  Cost is O(batch), never O(corpus); no retraining,
     no existing file read or rewritten (the refresh_ann_index story
     with a model sidecar)."""
-    cb = spark.read.schema("m int, c int, cv array<double>").parquet(
+    cb = spark.read.schema(PQ_CODEBOOK_SCHEMA).parquet(
         _sidecar(path, "codebook")
     )
     cents = spark.read.schema("cent_id bigint, cv array<double>").parquet(
@@ -788,7 +722,7 @@ def query_ivfpq_index(
     )
     probed = [r.cent_id for r in routes]
     qv = F.array(*[F.lit(float(x)) for x in routes[0].v])
-    cb = spark.read.schema("m int, c int, cv array<double>").parquet(
+    cb = spark.read.schema(PQ_CODEBOOK_SCHEMA).parquet(
         _sidecar(path, "codebook")
     )
     psubs = subvector_frame(probe.select("vec_id", "v"))

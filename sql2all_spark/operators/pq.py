@@ -20,8 +20,9 @@ Spark shape (the 100 TB story):
 
 - codebooks are M×K = 256 slim rows — broadcast at every stage, never
   shuffled;
-- the one wide exchange is the codebook-refinement partial aggregate
-  over slim (m, code, dim, val) rows (map-side combine);
+- the one wide exchange per training round is the codebook-refinement
+  partial aggregate over slim (m, code, dim, val) rows (map-side
+  combine);
 - encoding is a broadcast join + row-local argmin — linear scan, no
   shuffle;
 - the ADC table is M×K scored rows broadcast back, the shortlist is a
@@ -36,10 +37,18 @@ DECIMAL(28,12) sums, per-subspace ADC entries are rounded to 6dp and
 summed as DECIMAL(18,6) so the total is order-independent, and every
 argmin/rank carries an id tiebreak.
 
-Training parity: one seeded k-means refinement round per subspace — the
-same assign→recompute unit sim_kmeans_iteration proves in isolation;
-production would loop it (driver-side iteration, lineage truncated per
-round) without changing any per-round plan below.
+Training: ``pqmath.train_codebook`` runs seeded k-means rounds per
+subspace — the same assign→recompute unit sim_kmeans_iteration proves in
+isolation.  One builder and one oracle serve two registrations:
+``sim_pq_adc_topk`` trains for 1 round, ``sim_pq_train_loop`` for
+``PQ_TRAIN_ROUNDS`` (Jégou et al. 2011 §III train to k-means
+convergence).  Each round's codebook re-enters as a collected literal,
+so lineage stays flat and every round plans identically.  Both loop
+steps are non-increasing in total quantization error (assignment picks
+the argmin; the mean minimizes within-cluster squared distance), a
+tested invariant (6dp centroid rounding bounds the wobble).  The oracle unrolls the same rounds as CTE pairs
+(``pqmath.train_codebook_ctes``) — byte-identical arithmetic, since the
+collected literals carry the exact rounded doubles.
 
 Reference parity: SQL2ALL has no vector surface (658-line core delegates
 SQL to the attached DB — src/db/sqlite.rs:79); the similarity family
@@ -51,24 +60,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sql2all_spark.cache import persist_tracked
 from sql2all_spark.functions.embed import DIM, dbl
-
-# Core PQ math lives in functions/pqmath.py (non-registering), shared
-# with the IVF-PQ and train-loop operators; constants/fragments are
-# aliased to keep this module's oracle
-# text byte-identical to its pre-refactor form.
-from sql2all_spark.functions.pqmath import (
+from sql2all_spark.functions.pqmath import (  # noqa: F401 (PQ_K, PQ_M:
+    # tests import them from here)
     PQ_K,
     PQ_M,
-    PQ_SEED_IDS,
-    PQ_SUB,
     adc_score,
     adc_table,
-    dist2 as _dist2,
-    dist2_sql as _dist2_sql,
+    dist2,
+    dist2_sql,
     encode,
-    refined_codebook,
+    subvector_ctes,
     subvector_frame,
+    train_codebook,
+    train_codebook_ctes,
 )
 from sql2all_spark.registry import register
 from sql2all_spark.tables import load_table
@@ -76,58 +82,29 @@ from sql2all_spark.tables import load_table
 PQ_PROBE_ID = 0
 PQ_SHORTLIST = 100  # ADC candidates re-ranked exactly
 PQ_TOPK = 10
+PQ_TRAIN_ROUNDS = 3
 
 
-def _pq_oracle() -> str:
-    seeds = ", ".join(str(i) for i in PQ_SEED_IDS)
-    d2 = _dist2_sql("s.sv", "c.cv")
-    d2r = _dist2_sql("s.sv", "c.cv1")
-    qd2 = _dist2_sql("q.sv", "c.cv1")
-    full = _dist2_sql("v.v", "qv.v", DIM)
+def _pq_oracle(rounds: int) -> str:
+    d2 = dist2_sql("s.sv", f"c.cv{rounds}")
+    qd2 = dist2_sql("q.sv", f"c.cv{rounds}")
+    full = dist2_sql("v.v", "qv.v", DIM)
     return f"""
 WITH vecs AS (
   SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
-subs AS (
-  SELECT vec_id, m,
-         list_slice(v, m * {PQ_SUB} + 1, (m + 1) * {PQ_SUB}) AS sv
-  FROM vecs, (SELECT UNNEST(range(0, {PQ_M})) AS m)
-),
-cb0 AS (
-  SELECT s.m, ROW_NUMBER() OVER (PARTITION BY s.m ORDER BY s.vec_id) - 1 AS c,
-         s.sv AS cv
-  FROM subs s WHERE s.vec_id IN ({seeds})
-),
-assign0 AS (
-  SELECT s.vec_id, s.m, s.sv, c.c,
-         ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-                            ORDER BY ROUND({d2}, 6) ASC, c.c ASC) AS rk
-  FROM subs s JOIN cb0 c ON s.m = c.m
-),
-member AS (SELECT vec_id, m, sv, c FROM assign0 WHERE rk = 1),
-dims AS (
-  SELECT m, c, UNNEST(range(1, {PQ_SUB} + 1)) AS dim, UNNEST(sv) AS val
-  FROM member
-),
-cb1 AS (
-  SELECT m, c, list(mean_val ORDER BY dim) AS cv1
-  FROM (
-    SELECT m, c, dim,
-           ROUND(CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE)
-                 / COUNT(*), 6) AS mean_val
-    FROM dims GROUP BY m, c, dim
-  ) GROUP BY m, c
-),
-encode AS (
+{subvector_ctes("subs", "vecs")},
+{train_codebook_ctes("subs", rounds)},
+enc AS (
   SELECT s.vec_id, s.m, c.c,
          ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-                            ORDER BY ROUND({d2r}, 6) ASC, c.c ASC) AS rk
-  FROM subs s JOIN cb1 c ON s.m = c.m
+                            ORDER BY ROUND({d2}, 6) ASC, c.c ASC) AS rk
+  FROM subs s JOIN cb{rounds} c ON s.m = c.m
 ),
-codes AS (SELECT vec_id, m, c FROM encode WHERE rk = 1),
+codes AS (SELECT vec_id, m, c FROM enc WHERE rk = 1),
 adctab AS (
   SELECT q.m, c.c, ROUND({qd2}, 6) AS qd2
-  FROM subs q JOIN cb1 c ON q.m = c.m
+  FROM subs q JOIN cb{rounds} c ON q.m = c.m
   WHERE q.vec_id = {PQ_PROBE_ID}
 ),
 scored AS (
@@ -154,39 +131,19 @@ LIMIT {PQ_TOPK}
 """
 
 
-@register(
-    "sim_pq_adc_topk",
-    oracle=_pq_oracle(),
-    doc="Product-quantization ANN with exact re-rank (Jégou et al. 2011;"
-    " the FAISS PQ+refine shape): 16 subspaces of 4 dims, K=16 codebook"
-    " per subspace seeded from fixed vec_ids and refined by one k-means"
-    " round, every vector encoded as 16 codes (512 B -> 8 B), probe"
-    " shortlisted to the ADC top-100 via the broadcast M×K"
-    " asymmetric-distance table, then ONLY the shortlist hydrated for"
-    " exact-distance top-10 (measured recall@10 vs brute force: 10/9/8"
-    " across sf0.001/0.01/0.1).  Codebooks and the ADC table broadcast"
-    " everywhere; the only wide exchange is the slim refinement"
-    " aggregate; both rankings are bounded heaps — the PQ memory story"
-    " with no all-pairs anywhere.",
-)
-def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sql2all_spark.cache import materialize_tracked, persist_tracked
-
+def _pq_topk(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
+    """PQ+ADC shortlist + exact re-rank with codebooks trained for
+    ``rounds`` k-means rounds (the body of both registrations)."""
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select(
         "vec_id", "label", dbl(F.col("embedding")).alias("v")
     ).transform(persist_tracked)
     # (vec_id, m, sv): M slim subvector rows per vector — persisted, reused
-    # by refinement-assign, encode, and the probe's ADC row.
+    # by every training round, encode, and the probe's ADC row.
     subs = subvector_frame(vecs).transform(persist_tracked)
-
-    # seed codebooks + one k-means refinement round (pqmath; M*K = 256
-    # slim rows re-assembled into ordered arrays), then encode + ADC.
-    # Persisted: consumed by the encode broadcast AND the ADC-table
-    # broadcast — one training run instead of two (guide §5).
-    cb1 = refined_codebook(subs).transform(materialize_tracked)
-    codes = encode(subs, cb1)
-    adctab = adc_table(subs, cb1, PQ_PROBE_ID)
+    cb = train_codebook(subs, rounds)
+    codes = encode(subs, cb)
+    adctab = adc_table(subs, cb, PQ_PROBE_ID)
     shortlist = (
         adc_score(codes, adctab)
         .filter(F.col("vec_id") != PQ_PROBE_ID)
@@ -209,7 +166,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             "pq_code",
             "adc_dist2",
-            F.round(_dist2(F.col("v"), F.col("pv")), 6).alias("exact_dist2"),
+            F.round(dist2(F.col("v"), F.col("pv")), 6).alias("exact_dist2"),
         )
         .orderBy(
             F.col("exact_dist2").asc_nulls_last(),
@@ -217,3 +174,38 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(PQ_TOPK)
     )
+
+
+@register(
+    "sim_pq_adc_topk",
+    oracle=_pq_oracle(1),
+    doc="Product-quantization ANN with exact re-rank (Jégou et al. 2011;"
+    " the FAISS PQ+refine shape): 16 subspaces of 4 dims, K=16 codebook"
+    " per subspace seeded from fixed vec_ids and refined by one k-means"
+    " round, every vector encoded as 16 codes (512 B -> 8 B), probe"
+    " shortlisted to the ADC top-100 via the broadcast M×K"
+    " asymmetric-distance table, then ONLY the shortlist hydrated for"
+    " exact-distance top-10 (measured recall@10 vs brute force: 10/9/8"
+    " across sf0.001/0.01/0.1).  Codebooks and the ADC table broadcast"
+    " everywhere; the only wide exchange is the slim refinement"
+    " aggregate; both rankings are bounded heaps — the PQ memory story"
+    " with no all-pairs anywhere.",
+)
+def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _pq_topk(spark, sf_dir, 1)
+
+
+@register(
+    "sim_pq_train_loop",
+    oracle=_pq_oracle(PQ_TRAIN_ROUNDS),
+    doc=f"PQ+ADC+refine with codebooks trained for {PQ_TRAIN_ROUNDS} k-means"
+    " rounds instead of pq.py's single refinement (Jégou et al. train to"
+    " convergence): per round, one broadcast assign + one slim partial-"
+    " aggregated recompute; the 256-row codebook collects to the driver and"
+    " re-enters as a literal, so lineage stays flat and every round's plan"
+    " is IDENTICAL (plan-pinned).  Total quantization error is non-"
+    " increasing per round (k-means monotonicity, tested); the unrolled-CTE"
+    " oracle proves the full chain including the final ANN answer.",
+)
+def sim_pq_train_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _pq_topk(spark, sf_dir, PQ_TRAIN_ROUNDS)

@@ -10,7 +10,7 @@ final round is directly comparable to ``text_sp_unigram_prune`` (and
 strictly more converged: survivors must clear TWO prune cuts under
 successively re-estimated costs).
 
-DRIVER LOOP WITH LITERAL RE-ENTRY (the bpe_train / pq_train / classifier
+DRIVER LOOP WITH LITERAL RE-ENTRY (the bpe_train / PQ-codebook / classifier
 precedent): each round's piece costs are a BOUNDED collect
 (<= survivors + alphabet rows — the PQ-codebook rule) that re-enters the
 next round's Viterbi UDF as a closed-over dict literal, so every
@@ -41,11 +41,12 @@ from pyspark.sql import functions as F
 
 from sql2all_spark.functions.sp_core import (
     SP_KEEP,
-    SP_SCALE,
     SP_TOP,
     _distinct_words,
     _dp_em_ctes,
     _em_round,
+    _prune_ctes,
+    _prune_round,
     _seed_ctes,
     _segment_em,
 )
@@ -55,42 +56,6 @@ from sql2all_spark.registry import register
 # single-prune SP_KEEP target (Kudo 2018 shrinks by a fixed factor per
 # round; 40 -> 24 is the fixture-honest two-round schedule).
 SP_LOOP_SCHEDULE = (40, SP_KEEP)
-
-
-def _prune_ctes(src_em: str, keep: int, tag: str) -> str:
-    """One prune block: top-``keep`` of ``src_em`` by EM count + all
-    single characters, Laplace(+1)-renormalized costs -> ``vc{tag}``
-    (the cost table the next ``_dp_em_ctes(tag)`` chain consumes).
-    Identical arithmetic to the single prune round's CTEs."""
-    return f"""keep{tag} AS (
-  SELECT piece FROM (
-    SELECT piece,
-           ROW_NUMBER() OVER (
-             ORDER BY em_count DESC NULLS LAST, piece ASC NULLS FIRST
-           ) AS rn
-    FROM {src_em}
-  ) WHERE rn <= {keep}
-),
-surv{tag} AS (
-  SELECT piece FROM keep{tag}
-  UNION
-  SELECT piece FROM vc WHERE LENGTH(piece) = 1
-),
-em0{tag} AS (
-  SELECT s.piece, COALESCE(e.em_count, 0) AS em
-  FROM surv{tag} s LEFT JOIN {src_em} e USING (piece)
-),
-tot2{tag} AS (
-  SELECT CAST(SUM(em) AS DOUBLE) AS t, CAST(COUNT(*) AS DOUBLE) AS v
-  FROM em0{tag}
-),
-vc{tag} AS MATERIALIZED (
-  SELECT piece,
-         CAST(FLOOR({SP_SCALE}.0
-                    * -LN((CAST(em AS DOUBLE) + 1.0) / (t + v)) + 0.5)
-              AS BIGINT) AS cost
-  FROM em0{tag}, tot2{tag}
-)"""
 
 
 def _sp_loop_chain() -> tuple[str, str, str]:
@@ -173,12 +138,8 @@ def trained_costs(spark: SparkSession, sf_dir: str):
     # (b) the singles set reuses the seed cost dict _em_round already
     #     collected (was: a second vc.collect() job re-running the seed);
     # (c) the per-round Laplace cost table is built from the ALREADY-
-    #     COLLECTED EM ledger: the totals t = SUM(em), v = COUNT(*) are
-    #     exact integers computed driver-side (Python int sum == Spark's
-    #     long sum, both cast to the identical double), and only the
-    #     -LN stays engine-side — same FLOOR quantization discipline,
-    #     ONE local single-stage job per round instead of the old
-    #     createDataFrame -> agg -> broadcast-join -> collect chain.
+    #     COLLECTED EM ledger (sp_core._prune_round, shared with the
+    #     single prune round): ONE local single-stage job per round.
     from sql2all_spark.cache import materialize_tracked
     from sql2all_spark.looputil import loop_shuffle_partitions
 
@@ -198,41 +159,12 @@ def trained_costs(spark: SparkSession, sf_dir: str):
             # count is already fused (r17 #3), so the per-pass task
             # overhead is bounded by width, not cores.
             words = materialize_tracked(words.repartition(width))
-        words, vc, em, costs0 = _em_round(spark, sf_dir, words=words)
+        words, vc_cur, cur_em, costs0 = _em_round(spark, sf_dir, words=words)
         singles = sorted(p for p in costs0 if len(p) == 1)
-        cur_em = em
-        vc_cur = vc
         for rnd, keep in enumerate(SP_LOOP_SCHEDULE, start=1):
-            # bounded collect: the prune decision reads the EM ledger
-            # (<= previous survivors + alphabet rows) driver-side
-            em_rows = cur_em.collect()
-            em_map = {r["piece"]: r["em_count"] for r in em_rows}
+            em_map, vc_cur, costs = _prune_round(spark, cur_em, keep, singles)
             if rnd == 1:
-                em1_map = dict(em_map)
-            kept = sorted(
-                em_rows, key=lambda r: (-r["em_count"], r["piece"])
-            )
-            survivors = {r["piece"] for r in kept[:keep]} | set(singles)
-            em0_rows = sorted((p, em_map.get(p, 0)) for p in survivors)
-            # exact-integer totals (Laplace denominator) driver-side;
-            # the ln itself stays ENGINE-side (Spark ln — the FLOOR
-            # quantization discipline shared with the oracle)
-            tv = float(sum(em for _, em in em0_rows)) + float(len(em0_rows))
-            em0 = spark.createDataFrame(em0_rows, "piece string, em long")
-            vc_cur = em0.select(
-                "piece",
-                F.floor(
-                    F.lit(float(SP_SCALE))
-                    * -F.log(
-                        (F.col("em").cast("double") + F.lit(1.0))
-                        / F.lit(tv)
-                    )
-                    + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("cost"),
-            )
-            costs = {r["piece"]: r["cost"] for r in vc_cur.collect()}
+                em1_map = em_map
             # costs re-enter the E-step as literals: identical plan per round
             cur_em = _segment_em(words, costs)
     _TRAINED_CACHE[key] = (dict(costs), dict(em1_map))

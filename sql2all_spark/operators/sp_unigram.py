@@ -66,13 +66,14 @@ from sql2all_spark.functions.sp_core import (  # noqa: F401 (re-exports:
     # tests and the loop operator import these names from here)
     SP_KEEP,
     SP_PIECE_MAX,
-    SP_SCALE,
     SP_TOP,
     SP_VOCAB,
     SP_WORD_MAX,
     _SEP,
     _dp_em_ctes,
     _em_round,
+    _prune_ctes,
+    _prune_round,
     _seed_ctes,
     _segment_em,
     _viterbi_series,
@@ -92,43 +93,14 @@ LIMIT {SP_TOP}
 
 
 def _sp_prune_oracle() -> str:
-    """Round-2 (prune) oracle: the round-1 chain, then keep the top
-    ``SP_KEEP`` pieces by EM count (plus all single characters —
-    segmentability guarantee), Laplace-renormalized costs over the
-    survivors, a SECOND identical DP/EM chain under the new costs, and
-    the surviving-vocabulary report."""
+    """Round-2 (prune) oracle: the round-1 chain, then the prune block
+    (top ``SP_KEEP`` pieces by EM count plus all single characters,
+    Laplace-renormalized costs ``vc_p``), a SECOND identical DP/EM chain
+    under the new costs, and the surviving-vocabulary report."""
     return f"""
 WITH {_seed_ctes()},
 {_dp_em_ctes("")},
-keep AS (
-  SELECT piece FROM (
-    SELECT piece,
-           ROW_NUMBER() OVER (
-             ORDER BY em_count DESC NULLS LAST, piece ASC NULLS FIRST
-           ) AS rn
-    FROM em
-  ) WHERE rn <= {SP_KEEP}
-),
-surv AS (
-  SELECT piece FROM keep
-  UNION
-  SELECT piece FROM vc WHERE LENGTH(piece) = 1
-),
-em0 AS (
-  SELECT s.piece, COALESCE(e.em_count, 0) AS em
-  FROM surv s LEFT JOIN em e USING (piece)
-),
-tot2 AS (
-  SELECT CAST(SUM(em) AS DOUBLE) AS t, CAST(COUNT(*) AS DOUBLE) AS v
-  FROM em0
-),
-vc_p AS MATERIALIZED (
-  SELECT piece,
-         CAST(FLOOR({SP_SCALE}.0
-                    * -LN((CAST(em AS DOUBLE) + 1.0) / (t + v)) + 0.5)
-              AS BIGINT) AS cost
-  FROM em0, tot2
-),
+{_prune_ctes("em", SP_KEEP, "_p")},
 {_dp_em_ctes("_p")}
 SELECT em_p.piece, em_p.em_count, em_p.n_words, vc_p.cost AS prune_cost,
        CAST(COALESCE(e1.em_count, 0) AS BIGINT) AS em1_count
@@ -214,38 +186,11 @@ def text_sp_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     words = _distinct_words(spark, sf_dir)
     with loop_shuffle_partitions(words):
-        words, vc, em, costs = _em_round(spark, sf_dir, words=words)
-        # Bounded collect (<= SP_VOCAB + alphabet rows): the round-1 EM
-        # ledger drives the prune decision; the always-kept single
-        # characters come from the seed cost dict _em_round already
-        # collected (r17: one collect job instead of two).
-        em_rows = em.collect()
+        words, _vc, em, costs = _em_round(spark, sf_dir, words=words)
+        # the always-kept single characters come from the seed cost dict
+        # _em_round already collected (r17: one collect job instead of two)
         singles = {p for p in costs if len(p) == 1}
-        kept = sorted(em_rows, key=lambda r: (-r["em_count"], r["piece"]))
-        survivors = {r["piece"] for r in kept[:SP_KEEP]} | singles
-        em1 = {r["piece"]: r["em_count"] for r in em_rows}
-        em0_rows = sorted((p, em1.get(p, 0)) for p in survivors)
-        # exact-integer Laplace denominator driver-side (Python int sum
-        # == Spark long sum, cast to the identical double); the -LN
-        # stays ENGINE-side (Spark ln, like the seed costs) so both
-        # engines share the FLOOR quantization discipline — one local
-        # single-stage job instead of createDataFrame -> agg ->
-        # broadcast-join -> collect (r17, the sp_loop pattern).
-        tv = float(sum(em_ for _, em_ in em0_rows)) + float(len(em0_rows))
-        em0 = spark.createDataFrame(em0_rows, "piece string, em long")
-        vc2 = em0.select(
-            "piece",
-            F.floor(
-                F.lit(float(SP_SCALE))
-                * -F.log(
-                    (F.col("em").cast("double") + F.lit(1.0)) / F.lit(tv)
-                )
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("cost"),
-        )
-        costs2 = {r["piece"]: r["cost"] for r in vc2.collect()}
+        em1, vc2, costs2 = _prune_round(spark, em, SP_KEEP, singles)
     em2 = _segment_em(words, costs2)
     em1_df = spark.createDataFrame(
         sorted(em1.items()), "piece string, em1_count long"

@@ -54,7 +54,6 @@ _QUERY_MODULES = [
     "sql2all_spark.operators.novelty",
     "sql2all_spark.operators.pipeline",
     "sql2all_spark.operators.pq",
-    "sql2all_spark.operators.pq_train",
     "sql2all_spark.operators.profiling",
     "sql2all_spark.operators.quality_profile",
     "sql2all_spark.operators.range_search",

@@ -1,7 +1,8 @@
 """SparkSession factory with scale-aware defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-config here is chosen to also hold on a large multi-executor cluster:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs
+this process may run on) but every config here is chosen to also hold
+on a large multi-executor cluster:
 
 - AQE on (runtime shuffle-partition coalescing + skew-join splitting) so the
   same plan adapts from 60k rows to 100 TB without re-tuning.
@@ -131,7 +132,16 @@ DEFAULT_CONFS: dict[str, str] = {
 }
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local-mode width: ``SPARK_GRAFT_CPUS`` when set (the deployment
+    override), else the CPUs in this process's affinity mask —
+    ``os.cpu_count()`` where the platform has no affinity call."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
 
 
 def get_spark(

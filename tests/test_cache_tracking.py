@@ -3,9 +3,15 @@
 blocks at each builder invocation — the hygiene that keeps a multi-query
 runner (the driver gate) from accumulating cached blocks until the
 local-mode heap fills (the r7 sf1 OOM mode).  Also pins the driver-memory
-clamp added for ADVICE r7 #4."""
+clamp added for ADVICE r7 #4, the local-width default and the
+``checkpoint_tracked`` storage choice."""
 
 from __future__ import annotations
+
+import os
+from types import SimpleNamespace
+
+import pytest
 
 from sql2all_spark import cache
 from sql2all_spark.registry import all_specs
@@ -80,3 +86,60 @@ def test_driver_mem_clamp():
         os.environ.pop("SPARK_GRAFT_DRIVER_MEM", None)
         if env_before is not None:
             os.environ["SPARK_GRAFT_DRIVER_MEM"] = env_before
+
+
+def test_cpu_count_defaults_to_affinity_mask(monkeypatch):
+    """Unset, the local width is the CPUs this process may run on (not a
+    fixed constant); ``SPARK_GRAFT_CPUS`` still overrides it."""
+    from sql2all_spark.session import cpu_count
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert cpu_count() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert cpu_count() == 3
+
+
+class _FakeFrame:
+    """Just the surface ``checkpoint_tracked`` touches: the session's
+    ``getCheckpointDir`` (returns ``ckpt_dir``, or raises it when it is
+    an exception) and the two checkpoint calls, recorded."""
+
+    def __init__(self, ckpt_dir):
+        def get_dir():
+            if isinstance(ckpt_dir, Exception):
+                raise ckpt_dir
+            return ckpt_dir
+
+        sc = SimpleNamespace(getCheckpointDir=get_dir)
+        self.sparkSession = SimpleNamespace(sparkContext=sc)
+        self.calls: list[tuple] = []
+
+    def checkpoint(self):
+        self.calls.append(("checkpoint",))
+        return self
+
+    def localCheckpoint(self, eager=True):
+        self.calls.append(("localCheckpoint", eager))
+        return self
+
+
+@pytest.mark.parametrize("eager", [True, False])
+@pytest.mark.parametrize(
+    "ckpt_dir",
+    [
+        "file:///shared/ckpt",  # reliable dir configured
+        None,  # no dir (local mode, tests)
+        RuntimeError("getCheckpointDir unavailable"),
+    ],
+    ids=["dir_set", "no_dir", "dir_lookup_raises"],
+)
+def test_checkpoint_tracked_gate_matrix(ckpt_dir, eager):
+    """A configured checkpoint dir gets a reliable ``checkpoint()`` (which
+    ignores ``eager``); no dir, or a failing lookup, falls back to
+    ``localCheckpoint`` with ``eager`` passed through."""
+    df = _FakeFrame(ckpt_dir)
+    assert cache.checkpoint_tracked(df, eager=eager) is df
+    if isinstance(ckpt_dir, str):
+        assert df.calls == [("checkpoint",)]
+    else:
+        assert df.calls == [("localCheckpoint", eager)]

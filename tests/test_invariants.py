@@ -664,7 +664,7 @@ def test_pq_train_loop_quantization_error_monotone(spark, sf_dir):
         seed_codebook,
         subvector_frame,
     )
-    from sql2all_spark.operators.pq_train import PQ_TRAIN_ROUNDS
+    from sql2all_spark.operators.pq import PQ_TRAIN_ROUNDS
     from sql2all_spark.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")

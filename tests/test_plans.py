@@ -1081,7 +1081,7 @@ def test_pq_train_loop_round_plans_identical(spark, sf_dir):
         seed_codebook,
         subvector_frame,
     )
-    from sql2all_spark.operators.pq_train import PQ_TRAIN_ROUNDS
+    from sql2all_spark.operators.pq import PQ_TRAIN_ROUNDS
     from sql2all_spark.plans import physical_plan
     from sql2all_spark.tables import load_table
 

@@ -34,7 +34,7 @@ def main() -> None:
     import duckdb
 
     from sql2all_spark import registry
-    from sql2all_spark.session import get_spark
+    from sql2all_spark.session import cpu_count, get_spark
     from sql2all_spark.tables import TABLE_NAMES
 
     spark = get_spark("bench-vs-duckdb")
@@ -77,7 +77,7 @@ def main() -> None:
     total_spark = sum(r[1] for r in rows)
     total_duck = sum(r[2] for r in rows)
     lines = [
-        f"# Spark vs DuckDB at {args.sf_dir} (local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}])",
+        f"# Spark vs DuckDB at {args.sf_dir} (local[{cpu_count()}])",
         "",
         "| query | spark_sec | duckdb_sec | ratio |",
         "|---|---|---|---|",
