@@ -1,15 +1,30 @@
 #!/usr/bin/env python
-"""Benchmark harness: time every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness and per-query profiler: time registered queries at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture directory, ``SF_DIR``) on
+local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Usage: python bench.py [NAME ...] [--reps N]
+
+With no NAME every registered query runs (197 timers: the stored-index
+queries ``sim_lsh_ann_indexed`` and ``sim_ann_index_refresh`` each time
+their one-off build apart from the query).  ``--reps N`` (default 1)
+repeats each timer N times; before/after claims compare min-of-N.
+
+Prints ONE JSON line last:
   {"metric": "total_query_sec", "value": N, "unit": "sec",
    "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
 
 The printed line carries only the HEADLINE query subset so it stays well
 under the driver's output-tail buffer (BENCH_r01 recorded "parsed": null
 because the full 85-query line was longer than the captured tail); the
-complete per-query map is written to bench_full.json alongside the repo.
+complete map is written to bench_full.json alongside the repo, where
+``queries[timer]`` is the min wall over reps and ``runs[timer]`` holds one
+record per rep: ``wall_s``, the ``spark.*`` job record of the rep's own
+job group read from the in-process status store (jobs, stages, tasks, job
+time, driver gap, executor time, shuffle, spill, I/O; no Spark UI), and
+the ``storage_mb`` and ``persistent_rdds`` still held after the rep's
+``clearCache``.  One progress line per timer goes to stderr: min/median
+wall, jobs per rep and median driver gap.
 
 Each query is forced to full materialization with the noop sink (executes
 the whole plan, writes nothing, no driver-side collect bottleneck), which
@@ -19,15 +34,20 @@ absorbs JVM/codegen startup so per-query numbers reflect steady state.
 
 from __future__ import annotations
 
+import argparse
+import itertools
 import json
 import os
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
-from sql2all_spark import registry
-from sql2all_spark.session import get_spark
+from sql2all_spark import registry  # noqa: E402
+from sql2all_spark.session import get_spark  # noqa: E402
+from tracing import JobIds, job_record, persistent_rdd_ids, storage_mb  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -162,74 +182,129 @@ def _calibrate(spark) -> dict[str, float]:
     return out
 
 
+_GROUPS = itertools.count()
+
+
+def timed(spark, label: str, fn) -> dict:
+    """Run ``fn`` once as one rep of timer ``label`` and return its record.
+
+    The rep runs under a job group of its own (a group reused across reps
+    reports the running total of its jobs), and its ``spark.*`` fields come
+    from ``perfbench/tracing.py``'s status-store reader.  ``clearCache``
+    then drops what the query persisted, so queries stay isolated and
+    memory bounded; what it cannot drop (checkpointed blocks) is recorded."""
+    sc = spark.sparkContext
+    group = f"{label}#{next(_GROUPS)}"
+    jobs = JobIds(spark)
+    sc.setJobGroup(group, label)
+    w0, t0 = time.time(), time.perf_counter()
+    fn()
+    t1, w1 = time.perf_counter(), time.time()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    rec = {"wall_s": t1 - t0, **job_record(spark, jobs.take(group), w0, w1)}
+    spark.catalog.clearCache()
+    rec["storage_mb"] = storage_mb(spark)
+    rec["persistent_rdds"] = len(persistent_rdd_ids(spark))
+    return {k: round(v, 4) if isinstance(v, float) else v for k, v in rec.items()}
+
+
+def _ann_indexed(spark):
+    # Report the one-time index write and the pruned-bucket query
+    # separately: amortized over queries the build vanishes, and summing
+    # them into one number misread as a 7s "query" in r3.
+    from sql2all_spark.operators.similarity import build_ann_index, query_ann_index
+
+    path = None
+
+    def build():
+        nonlocal path
+        path = build_ann_index(spark, SF_DIR)
+
+    return [
+        ("sim_lsh_ann_index_build", build),
+        ("sim_lsh_ann_indexed_query",
+         lambda: _run(query_ann_index(spark, SF_DIR, path))),
+    ]
+
+
+def _ann_refresh(spark):
+    # Same split rationale as the stored index: the base-corpus build is a
+    # one-time amortized cost; the number that judges the operator is the
+    # O(batch) refresh + pruned query.
+    from pyspark.sql import functions as F
+
+    from sql2all_spark.operators.similarity import (
+        build_ann_index,
+        query_ann_index,
+        refresh_ann_index,
+    )
+    from sql2all_spark.tables import load_table
+
+    e = load_table(spark, SF_DIR, "embeddings")
+    path = None
+
+    def build():
+        nonlocal path
+        path = build_ann_index(
+            spark, SF_DIR, source=e.filter(F.col("vec_id") % 4 != 3),
+            suffix="_refresh",
+        )
+
+    def refresh():
+        refresh_ann_index(path, e.filter(F.col("vec_id") % 4 == 3))
+        _run(query_ann_index(spark, SF_DIR, path))
+
+    return [("sim_ann_refresh_base_build", build), ("sim_ann_index_refresh", refresh)]
+
+
+# registered names timed as (build, query) pairs; a rep runs the pair in order
+SPLIT = {"sim_lsh_ann_indexed": _ann_indexed, "sim_ann_index_refresh": _ann_refresh}
+
+
+def _progress(label: str, runs: list[dict]) -> None:
+    walls = [r["wall_s"] for r in runs]
+    gap = statistics.median(r["spark.driver_gap_s"] for r in runs)
+    print(
+        f"{label}: min {min(walls):.2f}s med {statistics.median(walls):.2f}s"
+        f" jobs {'/'.join(str(r['spark.jobs']) for r in runs)} gap {gap:.2f}s",
+        file=sys.stderr, flush=True,
+    )
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description="Time registered queries.")
+    ap.add_argument("names", nargs="*", metavar="NAME",
+                    help="registered query names (default: all)")
+    ap.add_argument("--reps", type=int, default=1, help="runs per timer")
+    args = ap.parse_args()
+    specs = registry.all_specs()
+    unknown = [n for n in args.names if n not in specs]
+    if unknown:
+        ap.error(f"unknown query name(s): {', '.join(unknown)}")
+    if args.reps < 1:
+        ap.error("--reps must be at least 1")
+
     start_load1 = _load1()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    specs = registry.all_specs()
 
     # Warmup: absorb JVM startup + first-parquet-footer costs.
     _run(specs["q1_pricing_summary"].builder(spark, SF_DIR))
 
     calib = _calibrate(spark)
 
-    times: dict[str, float] = {}
-    for name in sorted(specs):
-        if name == "sim_lsh_ann_indexed":
-            # Report the one-time index write and the pruned-bucket query
-            # separately: amortized over queries the build vanishes, and
-            # summing them into one number misread as a 7s "query" in r3.
-            from sql2all_spark.operators.similarity import (
-                build_ann_index,
-                query_ann_index,
-            )
-
-            t0 = time.perf_counter()
-            path = build_ann_index(spark, SF_DIR)
-            times["sim_lsh_ann_index_build"] = round(
-                time.perf_counter() - t0, 3
-            )
-            t0 = time.perf_counter()
-            _run(query_ann_index(spark, SF_DIR, path))
-            times["sim_lsh_ann_indexed_query"] = round(
-                time.perf_counter() - t0, 3
-            )
-            spark.catalog.clearCache()
-            continue
-        if name == "sim_ann_index_refresh":
-            # Same split rationale as the stored index: the base-corpus
-            # build is a one-time amortized cost; the number that judges
-            # the operator is the O(batch) refresh + pruned query.
-            from pyspark.sql import functions as F
-
-            from sql2all_spark.operators.similarity import (
-                build_ann_index,
-                query_ann_index,
-                refresh_ann_index,
-            )
-            from sql2all_spark.tables import load_table
-
-            e = load_table(spark, SF_DIR, "embeddings")
-            t0 = time.perf_counter()
-            path = build_ann_index(
-                spark, SF_DIR, source=e.filter(F.col("vec_id") % 4 != 3),
-                suffix="_refresh",
-            )
-            times["sim_ann_refresh_base_build"] = round(
-                time.perf_counter() - t0, 3
-            )
-            t0 = time.perf_counter()
-            refresh_ann_index(path, e.filter(F.col("vec_id") % 4 == 3))
-            _run(query_ann_index(spark, SF_DIR, path))
-            times["sim_ann_index_refresh"] = round(time.perf_counter() - t0, 3)
-            spark.catalog.clearCache()
-            continue
-        t0 = time.perf_counter()
-        _run(specs[name].builder(spark, SF_DIR))
-        times[name] = round(time.perf_counter() - t0, 3)
-        # several operators persist intermediates (signature tables, edge
-        # lists); drop them so queries are isolated and memory is bounded
-        spark.catalog.clearCache()
+    runs: dict[str, list[dict]] = {}
+    for name in args.names or sorted(specs):
+        if name in SPLIT:
+            timers = SPLIT[name](spark)
+        else:
+            timers = [(name, lambda b=specs[name].builder: _run(b(spark, SF_DIR)))]
+        for _ in range(args.reps):
+            for label, fn in timers:
+                runs.setdefault(label, []).append(timed(spark, label, fn))
+        for label, _ in timers:
+            _progress(label, runs[label])
+    times = {k: round(min(r["wall_s"] for r in rs), 3) for k, rs in runs.items()}
 
     full = {
         "metric": "total_query_sec",
@@ -242,9 +317,8 @@ def main() -> None:
         "contended": start_load1 > CONTENTION_LOAD1,
         **calib,
     }
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "bench_full.json"), "w") as f:
-        json.dump(full, f, indent=1)
+    with open(os.path.join(ROOT, "bench_full.json"), "w") as f:
+        json.dump({**full, "runs": runs}, f, indent=1)
     compact = dict(full)
     compact["queries"] = {k: times[k] for k in HEADLINE if k in times}
     spark.stop()  # flush the JVM so no late log lines trail the JSON line

@@ -658,11 +658,9 @@ def test_pq_train_loop_quantization_error_monotone(spark, sf_dir):
 
     from sql2all_spark.functions.embed import dbl
     from sql2all_spark.functions.pqmath import (
-        assign_nearest,
         dist2,
-        recompute_codebook,
-        seed_codebook,
         subvector_frame,
+        train_codebook,
     )
     from sql2all_spark.operators.pq import PQ_TRAIN_ROUNDS
     from sql2all_spark.tables import load_table
@@ -670,9 +668,9 @@ def test_pq_train_loop_quantization_error_monotone(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", dbl(F.col("embedding")).alias("v"))
     subs = subvector_frame(vecs).persist()
-    cb = seed_codebook(subs)
     costs = []
-    for _ in range(PQ_TRAIN_ROUNDS + 1):
+    for k in range(PQ_TRAIN_ROUNDS + 1):
+        cb = train_codebook(subs, k)
         cost = (
             subs.join(F.broadcast(cb), "m")
             .withColumn("d2", dist2(F.col("sv"), F.col("cv")))
@@ -683,10 +681,6 @@ def test_pq_train_loop_quantization_error_monotone(spark, sf_dir):
             .cost
         )
         costs.append(cost)
-        rows = recompute_codebook(assign_nearest(subs, cb)).collect()
-        cb = vecs.sparkSession.createDataFrame(
-            rows, "m int, c int, cv array<double>"
-        )
     subs.unpersist()
     for a, b in zip(costs, costs[1:]):
         assert b <= a + 1e-3, f"quantization error increased: {costs}"

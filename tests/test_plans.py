@@ -1078,8 +1078,8 @@ def test_pq_train_loop_round_plans_identical(spark, sf_dir):
     from sql2all_spark.functions.pqmath import (
         assign_nearest,
         recompute_codebook,
-        seed_codebook,
         subvector_frame,
+        train_codebook,
     )
     from sql2all_spark.operators.pq import PQ_TRAIN_ROUNDS
     from sql2all_spark.plans import physical_plan
@@ -1094,14 +1094,12 @@ def test_pq_train_loop_round_plans_identical(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", dbl(F.col("embedding")).alias("v"))
     subs = subvector_frame(vecs).persist()
-    cb = seed_codebook(subs)
-    shapes = []
-    for _ in range(PQ_TRAIN_ROUNDS):
-        rows = recompute_codebook(assign_nearest(subs, cb)).collect()
-        cb = spark.createDataFrame(rows, "m int, c int, cv array<double>")
-        shapes.append(shape(physical_plan(
-            recompute_codebook(assign_nearest(subs, cb))
-        )))
+    shapes = [
+        shape(physical_plan(
+            recompute_codebook(assign_nearest(subs, train_codebook(subs, k)))
+        ))
+        for k in range(1, PQ_TRAIN_ROUNDS + 1)
+    ]
     subs.unpersist()
     # rounds 1..N (all literal-codebook rounds) plan identically
     assert all(s == shapes[0] for s in shapes[1:]), shapes

@@ -1,6 +1,6 @@
-"""Every script under tools/ compiles and runs from any checkout path: none
-names the checkout's absolute path or puts a literal path on sys.path
-(each takes the repo root from ``__file__``)."""
+"""Every script under tools/, and bench.py, compiles and runs from any
+checkout path: none names the checkout's absolute path or puts a literal
+path on sys.path (each takes the repo root from ``__file__``)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import re
 def test_tools_compile_and_name_no_checkout_path(repo_root, tmp_path):
     scripts = sorted((repo_root / "tools").glob("*.py"))
     assert scripts
-    for path in scripts:
+    for path in scripts + [repo_root / "bench.py"]:
         py_compile.compile(
             str(path), cfile=str(tmp_path / f"{path.stem}.pyc"), doraise=True
         )

@@ -101,21 +101,14 @@ def main() -> None:
         f"{args.dir}/embeddings.parquet", nprobes
     )
 
-    from pyspark.sql import SparkSession
-
+    import sql2all_spark.operators.ivfpq as ivfpq_mod
     from sql2all_spark.operators.ivfpq import (
         ivfpq_residual_impl,
         ivfpq_topk_impl,
     )
+    from sql2all_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("ann_quality")
-        .getOrCreate()
-    )
-    import sql2all_spark.operators.ivfpq as ivfpq_mod
+    spark = get_spark("ann_quality")
 
     shortlists = (
         [int(x) for x in args.shortlists.split(",")]
