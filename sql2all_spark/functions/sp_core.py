@@ -26,7 +26,7 @@ SP_WORD_MAX = 12  # words longer than this skip the EM round (both engines)
 SP_VOCAB = 64  # seed vocabulary cut (singles always added back)
 SP_KEEP = 24  # prune round: multi-char survivors by EM count (singles stay)
 SP_TOP = 50  # output rows
-SP_SCALE = 1_000_000  # fixed-point -ln p scale (unigram_lm discipline)
+SP_SCALE = 1_000_000  # fixed-point -ln p scale (ngram_lm discipline)
 _SEP = "\x7f"  # sorts above every ASCII word char -> fewer-pieces tie-break
 # (ASCII-only guarantee — see module docstring step 4; parity holds
 # regardless since both engines compare the identical key)

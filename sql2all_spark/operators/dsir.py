@@ -149,7 +149,7 @@ ORDER BY rank ASC NULLS FIRST
 def text_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from sql2all_spark.functions.unigram_lm import unigram_doc_scores
+    from sql2all_spark.functions.ngram_lm import unigram_doc_scores
 
     toks = _tokens(F.col("text"))
     n_chars = F.length("text")

@@ -1,81 +1,57 @@
-"""Interpolated Kneser-Ney bigram LM scoring in the token-hash domain.
+"""Interpolated Kneser-Ney (KN) bigram and trigram document scoring —
+the smoothing real perplexity filters use (CCNet's KenLM models are KN
+smoothed; Kneser & Ney 1995, Chen & Goodman 1999's interpolated form,
+Heafield 2011 for the serving shape), where ``operators/lm.py`` is
+Stupid Backoff.  Absolute discount D = 0.75 at every level:
 
-Completes the LM-filter ladder with the smoothing real perplexity
-filters use: CCNet's KenLM models are Kneser-Ney smoothed (Heafield
-2011; Kneser & Ney 1995), where ``text_bigram_lm_score`` is Stupid
-Backoff (no discounting).  Absolute-discount interpolated form, single
-discount D = 0.75:
+    P(w3|w1,w2) = (c(w1w2w3) - D) / c(w1w2)  +  lam(w1,w2) * Pmid(w3|w2)
+    lam(w1,w2)  = D * N1+(w1,w2,*) / c(w1w2)
+    Pmid(w3|w2) = (N1+(*,w2,w3) - D) / N1+(*,w2,*)
+                  + lam_mid(w2) * Pcont(w3)
+    lam_mid(w2) = D * N1+t(w2,*) / N1+(*,w2,*)
+    Pcont(w3)   = N1+(*,w3) / N
 
-    P(v|u) = max(c(u,v) - D, 0) / c(u)  +  lam(u) * P_cont(v)
-    lam(u) = D * N1+(u,*) / c(u)          (probability mass freed by D)
-    P_cont(v) = N1+(*,v) / N              (continuation probability:
-                                           how many CONTEXTS v follows,
-                                           not how often — the KN idea)
+The bigram is the same form one level down: P(v|u) = (c(u,v) - D) /
+c(u) + lam(u) * Pcont(v).  Lower levels use CONTINUATION (type)
+counts — how many distinct contexts a suffix follows, not how often
+(the KN idea) — and every count derives from the one order-n count
+table, so summed over the full vocabulary the model normalizes level by
+level (pinned by the pure-Python replicas in tests/test_invariants.py).
 
-where N1+(u,*) = distinct successors of u, N1+(*,v) = distinct
-predecessors of v, N = distinct bigrams.  Self-scored corpus
-perplexity like the rest of the ladder.
-
-BOUNDED MODEL (the lm.py Stupid-Backoff precedent — serving tables must
-broadcast): top-``KN_BIGRAM_TOP`` bigram cells carry the full
-interpolated probability (exact c/cu/N1+ statistics); outside the cell
-table the score falls to ``lam(u) * P_cont(v)`` with lam from the
-top-``KN_VOCAB`` context table (contexts outside it contribute
-lam = 1.0 — pure continuation) and P_cont from the top-``KN_VOCAB``
-continuation table (unseen continuations floor at 1/N).  The bounded
-model is unnormalized at the margins, as any pruned serving LM is.
-
-TOKEN-HASH DOMAIN (the ``unigram_lm.py`` discipline): empty-string
-tokens (consecutive/trailing spaces) are dropped BEFORE hashing — the
-ladder's shared tokenization rule (ADVICE r14; unfiltered, '' hashed to
-a real bucket and whitespace runs minted phantom bigrams) — then tokens
-map row-locally to 30-bit md5 buckets and each bigram PACKS into ONE
-signed 64-bit key ``bg = u * 2^30 + v`` (< 2^60 — the contamination
-packing trick; 32-bit halves would overflow int64), so the bigram count
-exchange — the operator's only corpus-wide shuffle — carries a single
-8-byte key.  Context / continuation tables derive from the CELL table
-(GROUP BY u, GROUP BY v over distinct bigrams), which is model-sized,
-not corpus-sized.  All model tiebreaks run in the hash domain on both
-engines.
-
-Cross-engine determinism: per-position scores are fixed-point BIGINTs
-``FLOOR(1e6 * -ln P + 0.5)`` with P written as the IDENTICAL IEEE
-expression tree in both engines (pre-cast double operands, identical
-parenthesization); doc sums are exact integer sums.
-
-Scale shape: one corpus scan → row-local th array → inline-exploded
-packed bigrams (the contamination CollapseProject discipline — a
-two-step explode re-evaluates the packing per output element, measured
-46s vs 0.96s) → ONE slim count exchange; everything downstream is
-model-sized; scoring is three broadcast left-joins + one per-doc
-aggregation.  Raw text never crosses an exchange.
+Tokens hash row-locally into ``60 // order``-bit md5 buckets (30 bits
+for the bigram, 20 for the trigram) and each n-gram packs into ONE
+int64 (``bg = u*2^30 + v``, ``tg = w1*2^40 + w2*2^20 + w3``), so the
+operator's only corpus-wide exchange carries a single 8-byte key and
+every lower-order statistic is integer arithmetic on it.  The bounded
+serving model, its backoff and the fixed-point rules are in
+``functions/ngram_lm.py``.
 
 Reference parity note: SQL2ALL has no LM surface (its SQL passes
 through verbatim — src/db/sqlite.rs:79); LLM-pipeline extension family
-(SURVEY.md §2), completing the unigram / bigram-SB / trigram-SB ladder.
+(SURVEY.md §2).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from sql2all_spark.cache import persist_tracked
-from sql2all_spark.functions.hashing import base_hash, base_hash_sql
+from sql2all_spark.functions.hashing import base_hash_sql
+from sql2all_spark.functions.ngram_lm import (
+    D,
+    KN3_DOC_SELECT,
+    SCALE,
+    TOP,
+    VOCAB,
+    kn_chain_ctes,
+    kn_doc_scores,
+    packed_bits,
+)
 from sql2all_spark.registry import register
-from sql2all_spark.tables import load_table
-
-KN_TOKEN_BITS = 30  # 30-bit buckets: two pack into one int64 (< 2^60)
-KN_D = 0.75  # absolute discount (exact double literal in both engines)
-KN_VOCAB = 4096  # context / continuation model rows kept
-KN_BIGRAM_TOP = 512  # interpolated bigram cells kept (backoff stays live)
-KN_SCALE = 1_000_000  # fixed-point -ln p scale
-
-_B = 1 << KN_TOKEN_BITS
 
 
 def _kn_oracle() -> str:
-    th = f"{base_hash_sql('t')} % {_B}"
+    b = 1 << packed_bits(2)
+    th = f"{base_hash_sql('t')} % {b}"
     return f"""
 WITH d AS (
   SELECT doc_id,
@@ -85,11 +61,11 @@ WITH d AS (
   WHERE len(list_filter(string_split(text, ' '), t -> t <> '')) >= 2
 ),
 pr AS (
-  SELECT doc_id, th[i - 1] * {_B} + th[i] AS bg
+  SELECT doc_id, th[i - 1] * {b} + th[i] AS bg
   FROM (SELECT doc_id, th, UNNEST(range(2, len(th) + 1)) AS i FROM d)
 ),
 bc AS (
-  SELECT bg, bg // {_B} AS u, bg % {_B} AS v, COUNT(*) AS c12
+  SELECT bg, bg // {b} AS u, bg % {b} AS v, COUNT(*) AS c12
   FROM pr GROUP BY bg
 ),
 ctx AS (
@@ -107,23 +83,23 @@ nt AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nd FROM bc),
 btop AS (
   SELECT bg, u, v, c12 FROM bc
   ORDER BY c12 DESC NULLS LAST, bg ASC NULLS FIRST
-  LIMIT {KN_BIGRAM_TOP}
+  LIMIT {TOP}
 ),
 ctx_top AS (
   SELECT u, cud, n1fd FROM ctx
   ORDER BY cu DESC NULLS LAST, u ASC NULLS FIRST
-  LIMIT {KN_VOCAB}
+  LIMIT {VOCAB}
 ),
 cont_top AS (
   SELECT v, n1b FROM cont
   ORDER BY n1b DESC NULLS LAST, v ASC NULLS FIRST
-  LIMIT {KN_VOCAB}
+  LIMIT {VOCAB}
 ),
 bscored AS (
   SELECT b.bg,
-         CAST(FLOOR({KN_SCALE}.0 * -LN(
-                ((CAST(b.c12 AS DOUBLE) - {KN_D}) / cx.cud)
-                + ((({KN_D} * cx.n1fd) / cx.cud) * (cn.n1bd / nt.nd))
+         CAST(FLOOR({SCALE}.0 * -LN(
+                ((CAST(b.c12 AS DOUBLE) - {D}) / cx.cud)
+                + ((({D} * cx.n1fd) / cx.cud) * (cn.n1bd / nt.nd))
               ) + 0.5) AS BIGINT) AS s_bi
   FROM btop b
   JOIN ctx cx ON cx.u = b.u
@@ -134,9 +110,9 @@ tok AS (
   SELECT pr.doc_id,
          CASE WHEN bs.s_bi IS NOT NULL THEN 1 ELSE 0 END AS model_hit,
          CASE WHEN bs.s_bi IS NOT NULL THEN bs.s_bi
-              ELSE CAST(FLOOR({KN_SCALE}.0 * -LN(
+              ELSE CAST(FLOOR({SCALE}.0 * -LN(
                      (CASE WHEN cx.u IS NOT NULL
-                           THEN (({KN_D} * cx.n1fd) / cx.cud)
+                           THEN (({D} * cx.n1fd) / cx.cud)
                            ELSE 1.0 END)
                      * (CAST(COALESCE(cn.n1b, 1) AS DOUBLE) / nt.nd)
                    ) + 0.5) AS BIGINT)
@@ -144,14 +120,14 @@ tok AS (
   FROM pr
   CROSS JOIN nt
   LEFT JOIN bscored bs ON bs.bg = pr.bg
-  LEFT JOIN ctx_top cx ON cx.u = pr.bg // {_B}
-  LEFT JOIN cont_top cn ON cn.v = pr.bg % {_B}
+  LEFT JOIN ctx_top cx ON cx.u = pr.bg // {b}
+  LEFT JOIN cont_top cn ON cn.v = pr.bg % {b}
 )
 SELECT doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_bigrams,
        CAST(SUM(model_hit) AS BIGINT) AS n_model_hits,
        CAST((2 * SUM(s) + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE)
-         / {KN_SCALE}.0 AS avg_neglogp
+         / {SCALE}.0 AS avg_neglogp
 FROM tok GROUP BY doc_id
 """
 
@@ -161,11 +137,11 @@ FROM tok GROUP BY doc_id
     oracle=_kn_oracle(),
     doc="Interpolated Kneser-Ney bigram LM score (Kneser & Ney 1995;"
     " the smoothing CCNet's KenLM filters actually use, vs the ladder's"
-    f" Stupid-Backoff bigram): absolute discount D={KN_D} frees"
+    f" Stupid-Backoff bigram): absolute discount D={D} frees"
     " probability mass per context, redistributed over CONTINUATION"
     " probabilities (how many contexts a word follows, not how often it"
-    f" occurs).  Bounded serving model (top-{KN_BIGRAM_TOP} cells +"
-    f" top-{KN_VOCAB} context/continuation tables, all broadcastable);"
+    f" occurs).  Bounded serving model (top-{TOP} cells +"
+    f" top-{VOCAB} context/continuation tables, all broadcastable);"
     " tokens live in 30-bit md5 buckets with each bigram PACKED into"
     " one int64 so the only corpus-wide exchange carries a single"
     " 8-byte key (the contamination packing trick).  Per-position"
@@ -173,144 +149,26 @@ FROM tok GROUP BY doc_id
     " written identically in both engines.",
 )
 def text_kn_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sql2all_spark.spread import spread_fanout
+    return kn_doc_scores(spark, sf_dir, 2)
 
-    d = spread_fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    # §2.5 re-spread above (tokenize + hash + bigram pack is the
-    # scan-side CPU mass; int sums downstream).
-    # ADVICE r14: drop empty-string tokens (consecutive/trailing spaces)
-    # BEFORE hashing — the ladder's tokenization discipline
-    # (unigram_lm/novelty filter token <> ''); unfiltered, '' hashes to a
-    # real bucket and messy whitespace mints phantom bigrams.
-    w = d.select(
-        "doc_id",
-        F.filter(
-            F.split(F.col("text"), " "), lambda tok: tok != F.lit("")
-        ).alias("w"),
-    ).filter(F.size("w") >= 2)
-    # th materialized as a real column (contamination CollapseProject
-    # note: safe because the consumer references it more than once)
-    t = w.select(
-        "doc_id",
-        F.transform("w", lambda tok: base_hash(tok) % F.lit(_B)).alias("th"),
-    )
-    bgs = F.transform(
-        F.sequence(F.lit(2), F.size("th")),
-        lambda i: F.element_at(F.col("th"), i - 1) * F.lit(_B)
-        + F.element_at(F.col("th"), i),
-    )
-    # explode INLINE in one select (two-step explode re-evaluates the
-    # packed-bigram projection per OUTPUT ELEMENT — text.py measurement)
-    pr = t.select("doc_id", F.explode(bgs).alias("bg")).transform(
-        persist_tracked
-    )
-    bc = (
-        pr.groupBy("bg")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .select(
-            "bg",
-            F.expr(f"bg div {_B}").alias("u"),
-            (F.col("bg") % F.lit(_B)).alias("v"),
-            "c12",
-        )
-        .transform(persist_tracked)
-    )
-    ctx = bc.groupBy("u").agg(
-        F.sum("c12").cast("double").alias("cud"),
-        F.count(F.lit(1)).cast("double").alias("n1fd"),
-        F.sum("c12").cast("long").alias("cu"),
-    )
-    cont = bc.groupBy("v").agg(
-        F.count(F.lit(1)).cast("double").alias("n1bd"),
-        F.count(F.lit(1)).cast("long").alias("n1b"),
-    )
-    nt = bc.agg(F.count(F.lit(1)).cast("double").alias("nd"))
-    btop = bc.orderBy(
-        F.col("c12").desc_nulls_last(), F.col("bg").asc_nulls_first()
-    ).limit(KN_BIGRAM_TOP)
-    ctx_top = (
-        ctx.orderBy(F.col("cu").desc_nulls_last(), F.col("u").asc_nulls_first())
-        .limit(KN_VOCAB)
-        .select("u", "cud", "n1fd")
-    )
-    cont_top = (
-        cont.orderBy(
-            F.col("n1b").desc_nulls_last(), F.col("v").asc_nulls_first()
-        )
-        .limit(KN_VOCAB)
-        .select("v", "n1b")
-    )
-    d_lit = F.lit(KN_D)
-    scale = F.lit(float(KN_SCALE))
-    bscored = (
-        btop.join(ctx.select("u", "cud", "n1fd"), "u")
-        .join(cont.select("v", "n1bd"), "v")
-        .join(F.broadcast(nt), F.lit(True))
-        .select(
-            "bg",
-            F.floor(
-                scale
-                * -F.log(
-                    ((F.col("c12").cast("double") - d_lit) / F.col("cud"))
-                    + (
-                        ((d_lit * F.col("n1fd")) / F.col("cud"))
-                        * (F.col("n1bd") / F.col("nd"))
-                    )
-                )
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("s_bi"),
-        )
-    )
-    backoff_s = F.floor(
-        scale
-        * -F.log(
-            F.when(
-                F.col("u_t").isNotNull(),
-                (d_lit * F.col("n1fd")) / F.col("cud"),
-            ).otherwise(F.lit(1.0))
-            * (F.coalesce(F.col("n1b"), F.lit(1)).cast("double") / F.col("nd"))
-        )
-        + F.lit(0.5)
-    ).cast("long")
-    tok = (
-        pr.join(F.broadcast(nt), F.lit(True))
-        .join(F.broadcast(bscored), "bg", "left")
-        .join(
-            F.broadcast(
-                ctx_top.select(
-                    F.col("u").alias("u_t"), "cud", "n1fd"
-                )
-            ),
-            F.expr(f"bg div {_B}") == F.col("u_t"),
-            "left",
-        )
-        .join(
-            F.broadcast(cont_top.select(F.col("v").alias("v_t"), "n1b")),
-            (F.col("bg") % F.lit(_B)) == F.col("v_t"),
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.when(F.col("s_bi").isNotNull(), 1).otherwise(0).alias(
-                "model_hit"
-            ),
-            F.coalesce(F.col("s_bi"), backoff_s).alias("s"),
-        )
-    )
-    return tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum("model_hit").cast("long").alias("n_model_hits"),
-        # exact integer half-up average (the kn_trigram.py pattern;
-        # ROUND(double, 6) is the NOTES.md r15 halfway TRAP — conversion
-        # proven value-neutral on all four fixture SFs)
-        (
-            F.expr("(2 * sum(s) + count(1)) div (2 * count(1))").cast(
-                "double"
-            )
-            / scale
-        ).alias("avg_neglogp"),
-    )
+
+@register(
+    "text_kn_trigram_score",
+    oracle=f"""
+WITH {kn_chain_ctes()}
+{KN3_DOC_SELECT}
+""",
+    doc="Interpolated Kneser-Ney TRIGRAM LM score (Kneser & Ney 1995,"
+    " Chen & Goodman interpolated form) — one more packed level over"
+    f" the KN bigram: absolute discount D={D} at both levels, the"
+    " middle/bottom levels on CONTINUATION (type) counts derived"
+    " entirely from the single trigram count table.  Tokens in 20-bit"
+    " md5 buckets, each trigram PACKED into one int64 (3x20 < 2^60) so"
+    " the only corpus-wide exchange carries an 8-byte key; bounded"
+    f" serving model (top-{TOP} cells + four top-{VOCAB}"
+    " ctx/mid/midctx/cont tables, all broadcast).  Per-position scores"
+    " are fixed-point BIGINTs from an IEEE expression tree written"
+    " identically in both engines.",
+)
+def text_kn_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return kn_doc_scores(spark, sf_dir, 3)

@@ -1,56 +1,39 @@
-"""Bigram language-model document scoring with Stupid Backoff.
+"""Stupid Backoff (SB) bigram and trigram document scoring (Brants et
+al. 2007): score(w_n | context) = c(context, w_n) / c(context) when the
+n-gram is a model cell, else ALPHA * the next-lower-order score, down to
+the unigram vocabulary and the 1/total OOV floor.  No discounting, so
+every model cell is a ratio of two corpus counts and the model is
+trivially distributable.  The order-0 rung is ``text_unigram_lm_score``
+(``operators/text.py``); all three build on ``functions/ngram_lm.py``.
 
-Completes the LM-filter family: ``text_unigram_lm_score`` is the order-0
-KenLM stand-in; this is the order-1 version actually used for perplexity-
-band filtering (Brants et al. 2007 "Stupid Backoff": score(w2|w1) =
-count(w1,w2)/count(w1) when the bigram is in the model, else
-ALPHA * p_unigram(w2) — no discounting, which is exactly what makes it
-distributable: every model cell is a ratio of two corpus counts).
-
-Scale shape (all three model tables are count aggregates with map-side
-combine, then bounded broadcasts):
-- unigram counts: one slim (token, count) shuffle; top-V vocabulary via
-  TakeOrderedAndProject (bounded heap);
-- bigram counts: bigrams generated ROW-LOCAL from each doc's token array
-  (no positional self-join), one slim (w1, w2, count) shuffle, top-B
-  model cells via bounded heap, conditional probabilities from a join
-  against the unigram counts;
-- scoring: one pass over (doc_id, prev, cur) rows, two broadcast left
-  joins, one keyed per-doc aggregation.  Raw text never crosses an
-  exchange; the model size is V + B rows regardless of corpus size.
-
-Cross-engine determinism: per-token scores are fixed-point BIGINTs
-(floor(SCALE * -ln p + 0.5)) so doc sums are exact and order-free; the
-backoff penalty -ln(ALPHA) is injected as a PRE-COMPUTED integer literal
-into both engines (never re-derived from a float literal, whose ln could
-differ in the last ulp); model-cell selection ties break on (count desc,
-w1 asc, w2 asc).
+Tokens are raw strings; model-cell ties break on (count desc, context
+asc, token asc).  Reference parity: SQL2ALL delegates arbitrary SQL to
+the backing engine (src/lib.rs:76-90); n-gram LM scoring is the
+corpus-curation extension family (SURVEY §2.B "LLM-ext").
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from sql2all_spark.cache import persist_tracked
+from sql2all_spark.functions.ngram_lm import (
+    BACKOFF_ALPHA,
+    S_BACKOFF,
+    SCALE,
+    TOP,
+    VOCAB,
+    sb_doc_scores,
+)
 from sql2all_spark.registry import register
-from sql2all_spark.tables import load_table
-
-BIGRAM_TOP = 512  # model cells kept — small enough that backoff is LIVE
-                  # at every test SF (sf0.01 has ~2.5k distinct bigrams)
-LM_SCALE = 1_000_000
-BACKOFF_ALPHA = 0.4
-# floor(LM_SCALE * -ln(0.4) + 0.5), precomputed so BOTH engines add the
-# identical integer instead of each taking ln of a float literal
-S_BACKOFF = 916291
 
 
 @register(
     "text_bigram_lm_score",
     oracle=f"""
 WITH d AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-  WHERE len(string_split(text, ' ')) >= 1
+  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
+  FROM documents
+  WHERE len(list_filter(string_split(text, ' '), t -> t <> '')) >= 1
 ),
 pr AS (
   SELECT doc_id,
@@ -67,11 +50,11 @@ tot AS (
 vocab AS (
   SELECT token, c FROM counts
   ORDER BY c DESC NULLS LAST, token ASC NULLS FIRST
-  LIMIT 4096
+  LIMIT {VOCAB}
 ),
 scored AS (
   SELECT token,
-         CAST(FLOOR({LM_SCALE}.0 * -LN(CAST(c AS DOUBLE) / t) + 0.5)
+         CAST(FLOOR({SCALE}.0 * -LN(CAST(c AS DOUBLE) / t) + 0.5)
               AS BIGINT) AS s_uni
   FROM vocab, tot
 ),
@@ -82,11 +65,11 @@ bcounts AS (
 btop AS (
   SELECT w1, w2, c12 FROM bcounts
   ORDER BY c12 DESC NULLS LAST, w1 ASC NULLS FIRST, w2 ASC NULLS FIRST
-  LIMIT {BIGRAM_TOP}
+  LIMIT {TOP}
 ),
 bscored AS (
   SELECT b.w1, b.w2,
-         CAST(FLOOR({LM_SCALE}.0 *
+         CAST(FLOOR({SCALE}.0 *
                     -LN(CAST(b.c12 AS DOUBLE) / CAST(u.c AS DOUBLE)) + 0.5)
               AS BIGINT) AS s_bi
   FROM btop b JOIN counts u ON u.token = b.w1
@@ -96,7 +79,7 @@ tok AS (
          CASE WHEN bs.s_bi IS NOT NULL THEN 1 ELSE 0 END AS bigram_hit,
          CASE WHEN bs.s_bi IS NOT NULL THEN bs.s_bi
               ELSE COALESCE(sc.s_uni,
-                            CAST(FLOOR({LM_SCALE}.0 * -LN(1.0 / t) + 0.5)
+                            CAST(FLOOR({SCALE}.0 * -LN(1.0 / t) + 0.5)
                                  AS BIGINT))
                    + CASE WHEN pr.w1 IS NOT NULL THEN {S_BACKOFF} ELSE 0 END
          END AS s
@@ -109,10 +92,10 @@ SELECT doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
        CAST(SUM(bigram_hit) AS BIGINT) AS n_bigram_hits,
        CAST((2 * SUM(s) + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE)
-         / {LM_SCALE}.0 AS avg_neglogp
+         / {SCALE}.0 AS avg_neglogp
 FROM tok GROUP BY doc_id
 """,
-    doc=f"Stupid-Backoff bigram LM score: top-{BIGRAM_TOP} bigram model"
+    doc=f"Stupid-Backoff bigram LM score: top-{TOP} bigram model"
     " cells (MLE conditional probabilities), backoff to"
     f" {BACKOFF_ALPHA} × unigram for unmodeled bigrams, pure unigram for"
     " each document's first token, OOV floor 1/total.  Low scores ="
@@ -124,99 +107,114 @@ FROM tok GROUP BY doc_id
     " in both engines.",
 )
 def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    # materialized split + filter (the CollapseProject recipe) then ONE
-    # select with the explode inline (the Generate per-element re-eval
-    # trap — see text_contamination_check)
-    w = d.select("doc_id", F.split("text", " ").alias("w")).filter(
-        F.size("w") >= 1
-    )
-    pr = w.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("w")),
-                lambda i: F.struct(
-                    F.when(i > 1, F.element_at(F.col("w"), i - 1)).alias("w1"),
-                    F.element_at(F.col("w"), i).alias("w2"),
-                ),
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.w1", "p.w2")
+    return sb_doc_scores(spark, sf_dir, 2)
 
-    counts = (
-        pr.groupBy(F.col("w2").alias("token"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .transform(persist_tracked)
-    )
-    # Corpus total: a LAZY 1-row aggregate broadcast onto both consumers
-    # (the sim_neardup_pairs ppb pattern) — plan construction runs no job
-    # and the total reflects execution-time state (ADVICE r8).  The
-    # aggregate reads the persisted (token, count) table, not the corpus.
-    tot = counts.agg(F.sum("c").cast("double").alias("t"))
-    scale = F.lit(float(LM_SCALE))
-    scored = (
-        counts.orderBy(F.col("c").desc_nulls_last(), F.col("token").asc_nulls_first())
-        .limit(4096)
-        .join(F.broadcast(tot), F.lit(True))
-        .select(
-            "token",
-            F.floor(scale * -F.log(F.col("c").cast("double") / F.col("t")) + F.lit(0.5))
-            .cast("long")
-            .alias("s_uni"),
-        )
-    )
-    btop = (
-        pr.filter(F.col("w1").isNotNull())
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .orderBy(
-            F.col("c12").desc_nulls_last(),
-            F.col("w1").asc_nulls_first(),
-            F.col("w2").asc_nulls_first(),
-        )
-        .limit(BIGRAM_TOP)
-    )
-    bscored = btop.join(
-        counts.select(F.col("token").alias("w1"), F.col("c").alias("c1")), "w1"
-    ).select(
-        "w1",
-        "w2",
-        F.floor(
-            scale * -F.log(F.col("c12").cast("double") / F.col("c1").cast("double"))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("s_bi"),
-    )
-    oov = F.floor(scale * -F.log(F.lit(1.0) / F.col("t")) + F.lit(0.5)).cast("long")
-    tok = (
-        pr.join(F.broadcast(bscored), ["w1", "w2"], "left")
-        .join(
-            F.broadcast(scored.withColumnRenamed("token", "w2")), "w2", "left"
-        )
-        .join(F.broadcast(tot), F.lit(True))
-        .select(
-            "doc_id",
-            F.when(F.col("s_bi").isNotNull(), 1).otherwise(0).alias("bigram_hit"),
-            F.when(F.col("s_bi").isNotNull(), F.col("s_bi"))
-            .otherwise(
-                F.coalesce(F.col("s_uni"), oov)
-                + F.when(F.col("w1").isNotNull(), S_BACKOFF).otherwise(0)
-            )
-            .alias("s"),
-        )
-    )
-    return tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum("bigram_hit").cast("long").alias("n_bigram_hits"),
-        # exact integer half-up average (the kn_trigram.py pattern;
-        # ROUND(double, 6) is the NOTES.md r15 halfway TRAP — conversion
-        # proven value-neutral on all four fixture SFs)
-        (
-            F.expr("(2 * sum(s) + count(1)) div (2 * count(1))").cast(
-                "double"
-            )
-            / scale
-        ).alias("avg_neglogp"),
-    )
+
+@register(
+    "text_trigram_lm_score",
+    oracle=f"""
+WITH d AS (
+  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
+  FROM documents
+  WHERE len(list_filter(string_split(text, ' '), t -> t <> '')) >= 1
+),
+pr AS (
+  SELECT doc_id,
+         CASE WHEN i > 2 THEN w[i - 2] END AS w1,
+         CASE WHEN i > 1 THEN w[i - 1] END AS w2,
+         w[i] AS w3
+  FROM (SELECT doc_id, w, UNNEST(range(1, len(w) + 1)) AS i FROM d)
+),
+counts AS (
+  SELECT w3 AS token, COUNT(*) AS c FROM pr GROUP BY w3
+),
+tot AS (
+  SELECT CAST(SUM(c) AS DOUBLE) AS t FROM counts
+),
+vocab AS (
+  SELECT token, c FROM counts
+  ORDER BY c DESC NULLS LAST, token ASC NULLS FIRST
+  LIMIT {VOCAB}
+),
+uscored AS (
+  SELECT token,
+         CAST(FLOOR({SCALE}.0 * -LN(CAST(c AS DOUBLE) / t) + 0.5)
+              AS BIGINT) AS s_uni
+  FROM vocab, tot
+),
+bcounts AS (
+  SELECT w2, w3, COUNT(*) AS c23 FROM pr WHERE w2 IS NOT NULL
+  GROUP BY w2, w3
+),
+btop AS (
+  SELECT w2, w3, c23 FROM bcounts
+  ORDER BY c23 DESC NULLS LAST, w2 ASC NULLS FIRST, w3 ASC NULLS FIRST
+  LIMIT {TOP}
+),
+bscored AS (
+  SELECT b.w2, b.w3,
+         CAST(FLOOR({SCALE}.0 *
+                    -LN(CAST(b.c23 AS DOUBLE) / CAST(u.c AS DOUBLE)) + 0.5)
+              AS BIGINT) AS s_bi
+  FROM btop b JOIN counts u ON u.token = b.w2
+),
+tcounts AS (
+  SELECT w1, w2, w3, COUNT(*) AS c123 FROM pr WHERE w1 IS NOT NULL
+  GROUP BY w1, w2, w3
+),
+ttop AS (
+  SELECT w1, w2, w3, c123 FROM tcounts
+  ORDER BY c123 DESC NULLS LAST, w1 ASC NULLS FIRST,
+           w2 ASC NULLS FIRST, w3 ASC NULLS FIRST
+  LIMIT {TOP}
+),
+tscored AS (
+  SELECT tt.w1, tt.w2, tt.w3,
+         CAST(FLOOR({SCALE}.0 *
+                    -LN(CAST(tt.c123 AS DOUBLE) / CAST(bc.c23 AS DOUBLE))
+                    + 0.5) AS BIGINT) AS s_tri
+  FROM ttop tt JOIN bcounts bc ON bc.w2 = tt.w1 AND bc.w3 = tt.w2
+),
+tok AS (
+  SELECT pr.doc_id,
+         CASE WHEN ts.s_tri IS NOT NULL THEN 1 ELSE 0 END AS trigram_hit,
+         CASE WHEN ts.s_tri IS NULL AND bs.s_bi IS NOT NULL THEN 1 ELSE 0
+         END AS bigram_hit,
+         CASE WHEN ts.s_tri IS NOT NULL THEN ts.s_tri
+              WHEN bs.s_bi IS NOT NULL THEN
+                bs.s_bi
+                + CASE WHEN pr.w1 IS NOT NULL THEN {S_BACKOFF} ELSE 0 END
+              ELSE COALESCE(us.s_uni,
+                            CAST(FLOOR({SCALE}.0 * -LN(1.0 / t) + 0.5)
+                                 AS BIGINT))
+                   + CASE WHEN pr.w1 IS NOT NULL THEN {S_BACKOFF} ELSE 0 END
+                   + CASE WHEN pr.w2 IS NOT NULL THEN {S_BACKOFF} ELSE 0 END
+         END AS s
+  FROM pr
+  CROSS JOIN tot
+  LEFT JOIN tscored ts
+         ON ts.w1 = pr.w1 AND ts.w2 = pr.w2 AND ts.w3 = pr.w3
+  LEFT JOIN bscored bs ON bs.w2 = pr.w2 AND bs.w3 = pr.w3
+  LEFT JOIN uscored us ON us.token = pr.w3
+)
+SELECT doc_id,
+       CAST(COUNT(*) AS BIGINT) AS n_tokens,
+       CAST(SUM(trigram_hit) AS BIGINT) AS n_trigram_hits,
+       CAST(SUM(bigram_hit) AS BIGINT) AS n_bigram_hits,
+       CAST((2 * SUM(s) + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE)
+         / {SCALE}.0 AS avg_neglogp
+FROM tok GROUP BY doc_id
+""",
+    doc=f"Stupid-Backoff trigram LM score: top-{TOP} trigram model"
+    f" cells conditioned on their context bigram counts, backing off by"
+    f" {BACKOFF_ALPHA}× per level to the top-{TOP} bigram model,"
+    f" then the top-{VOCAB} unigram vocabulary, then the 1/total OOV"
+    " floor — the order-2 KenLM perplexity-band filter, and the smallest"
+    " order where the backoff chain actually recurses.  Model tables are"
+    " bounded broadcasts (V + B + T rows at any corpus size); n-grams"
+    " generate row-local; per-token scores are fixed-point BIGINTs so"
+    " doc sums are exact and order-free; the per-level backoff penalty"
+    " is a precomputed integer literal in both engines.",
+)
+def text_trigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sb_doc_scores(spark, sf_dir, 3)

@@ -14,7 +14,7 @@ Semantics (both engines, bit-identical):
    UNION all single characters — singles guarantee every word segments
    (OOV characters are impossible: singles derive from the same words).
 3. **Piece costs** — fixed-point BIGINTs ``FLOOR(1e6 * -ln(f/total) + 0.5)``
-   over the selected vocabulary (the ``functions/unigram_lm.py``
+   over the selected vocabulary (the ``functions/ngram_lm.py``
    discipline), so path costs are exact integer sums in both engines.
 4. **E-step (Viterbi)** — per distinct word, the segmentation minimising
    ``(total_cost, seg_string)``; the segmentation string carries a

@@ -17,6 +17,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql2all_spark.functions.hashing import base_hash_sql
+from sql2all_spark.functions.ngram_lm import (
+    UNIGRAM_ORACLE,
+    VOCAB,
+    unigram_doc_scores,
+)
 from sql2all_spark.cache import materialize_tracked, persist_tracked
 from sql2all_spark.registry import register
 from sql2all_spark.tables import load_table
@@ -585,26 +590,12 @@ def text_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-# Unigram-LM quality scoring: vocabulary cap and the fixed-point scale for
-# the per-token -log p values.  Scores are summed as scaled BIGINTs so the
-# per-doc reduction is order-free (float sums are not associative); only
-# the per-DISTINCT-token LN is floating point, and both engines' ln agree
-# to <=2 ulp, far inside the 1e-6 fixed-point grid.
-from sql2all_spark.functions.unigram_lm import (  # noqa: E402
-    UNIGRAM_ORACLE,
-    UNIGRAM_SCALE,
-    UNIGRAM_VOCAB,
-    unigram_doc_scores,
-)
-
-
 @register(
     "text_unigram_lm_score",
     oracle=UNIGRAM_ORACLE,
     doc=f"Unigram language-model document quality score — the KenLM-filter"
     " stand-in: two corpus passes (token counts -> top-"
-    f"{UNIGRAM_VOCAB} vocabulary with MLE probabilities; then per-doc"
+    f"{VOCAB} vocabulary with MLE probabilities; then per-doc"
     " average -log p with out-of-vocabulary tokens backed off to 1/total)."
     "  Low scores = high-probability boilerplate, high scores = gibberish"
     " — the standard perplexity-band filter in corpus curation.  Scale"
@@ -616,7 +607,7 @@ from sql2all_spark.functions.unigram_lm import (  # noqa: E402
     " is exact and order-free in both engines.",
 )
 def text_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one definition, shared with operators/ccnet.py (functions/unigram_lm.py)
+    # one definition, shared with operators/ccnet.py and operators/dsir.py
     return unigram_doc_scores(spark, sf_dir)
 
 

@@ -43,12 +43,9 @@ _QUERY_MODULES = [
     "sql2all_spark.operators.ivfpq",
     "sql2all_spark.operators.joins",
     "sql2all_spark.operators.kfold",
-    "sql2all_spark.operators.kn_ccnet",
     "sql2all_spark.operators.kn_lm",
-    "sql2all_spark.operators.kn_trigram",
     "sql2all_spark.operators.layout",
     "sql2all_spark.operators.lm",
-    "sql2all_spark.operators.lm_trigram",
     "sql2all_spark.operators.mm_cluster",
     "sql2all_spark.operators.multimodal",
     "sql2all_spark.operators.novelty",

@@ -35,3 +35,17 @@ def test_unknown_query_name_exits_before_spark(repo_root):
     assert "no_such_query" in out.stderr
     assert "q1_pricing_summary" not in out.stderr.split("error:")[-1]
     assert "Traceback" not in out.stderr
+
+
+def test_tracer_wrapped_names_resolve():
+    # perfbench's tracer looks its layer functions up by name; a renamed
+    # or deleted one would only fail a traced benchmark run
+    import importlib
+
+    import bench  # noqa: F401  (puts perfbench/ on sys.path, as a run does)
+    import tracing
+
+    entries = tracing.WRAPPED + [tracing.LOOP]
+    assert entries
+    for mod_name, attr, _ in entries:
+        assert callable(getattr(importlib.import_module(mod_name), attr)), attr

@@ -8,6 +8,8 @@ other.
 
 from __future__ import annotations
 
+import pytest
+
 from sql2all_spark.registry import all_specs
 
 
@@ -1050,18 +1052,19 @@ def test_kn_bigram_matches_python_replica_and_normalizes(spark, sf_dir):
     import math
     from collections import Counter, defaultdict
 
-    from sql2all_spark.operators.kn_lm import (
-        _B,
-        KN_BIGRAM_TOP,
-        KN_D,
-        KN_SCALE,
-        KN_VOCAB,
-        text_kn_bigram_score,
+    from sql2all_spark.functions.ngram_lm import (
+        D as KN_D,
+        SCALE as KN_SCALE,
+        TOP as KN_BIGRAM_TOP,
+        VOCAB as KN_VOCAB,
+        packed_bits,
     )
+    from sql2all_spark.operators.kn_lm import text_kn_bigram_score
     from sql2all_spark.functions.hashing import base_hash
     from sql2all_spark.tables import load_table
     from pyspark.sql import functions as F
 
+    _B = 1 << packed_bits(2)
     # raw (doc_id, token-hash list), hashed with the SAME engine-side md5
     # (empty tokens dropped first — the ladder discipline, ADVICE r14)
     d = load_table(spark, sf_dir, "documents")
@@ -1172,19 +1175,20 @@ def test_kn_trigram_matches_python_replica_and_normalizes(spark, sf_dir):
     import math
     from collections import Counter, defaultdict
 
-    from sql2all_spark.operators.kn_trigram import (
-        _B1,
-        _B2,
-        KN3_D,
-        KN3_SCALE,
-        KN3_TOP,
-        KN3_VOCAB,
-        text_kn_trigram_score,
+    from sql2all_spark.functions.ngram_lm import (
+        D as KN3_D,
+        SCALE as KN3_SCALE,
+        TOP as KN3_TOP,
+        VOCAB as KN3_VOCAB,
+        packed_bits,
     )
+    from sql2all_spark.operators.kn_lm import text_kn_trigram_score
     from sql2all_spark.functions.hashing import base_hash
     from sql2all_spark.tables import load_table
     from pyspark.sql import functions as F
 
+    _B1 = 1 << packed_bits(3)
+    _B2 = _B1 * _B1
     d = load_table(spark, sf_dir, "documents")
     rows = (
         d.select(
@@ -1315,6 +1319,66 @@ def test_kn_trigram_matches_python_replica_and_normalizes(spark, sf_dir):
             engine_sum,
             ssum,
         )
+
+
+_MESSY_DOCS = [
+    "a  b c",
+    "a b c ",
+    " a b  c d",
+    "b c a b c  a",
+    "x  y",
+    "c",
+    "   ",
+    "a b c d e a b c",
+]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_unigram_lm_score",
+        "text_bigram_lm_score",
+        "text_trigram_lm_score",
+        "text_kn_bigram_score",
+        "text_kn_trigram_score",
+    ],
+)
+def test_lm_scorers_drop_empty_tokens(spark, tmp_path, name):
+    """Whitespace runs and leading/trailing spaces mint no tokens in any
+    scorer: each matches its DuckDB oracle over messy text, and the SB
+    scorers count only the non-empty tokens."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.check import frame_rows
+
+    n = len(_MESSY_DOCS)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(n), pa.int64()),
+                "text": _MESSY_DOCS,
+                "lang": ["en"] * n,
+                "source": ["src0"] * n,
+                "n_chars": pa.array([len(t) for t in _MESSY_DOCS], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    spec = all_specs()[name]
+    got = spec.builder(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    want = con.execute(spec.oracle).fetchdf()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert frame_rows(got) == frame_rows(want)
+    if "n_tokens" in got.columns:
+        for doc_id, n_tokens in zip(got["doc_id"], got["n_tokens"]):
+            words = [t for t in _MESSY_DOCS[doc_id].split(" ") if t]
+            assert n_tokens == len(words), doc_id
 
 
 def test_sp_train_loop_conserves_chars_shrinks_and_reenters_literally(
@@ -1989,8 +2053,8 @@ def test_kn_ccnet_buckets_tile_the_scorer(spark, sf_dir):
     each language (ties may touch at the boundary)."""
     from collections import defaultdict
 
-    from sql2all_spark.functions.kn3_core import kn3_doc_scores
-    from sql2all_spark.operators.kn_ccnet import text_kn_ccnet_buckets
+    from sql2all_spark.functions.ngram_lm import kn_doc_scores
+    from sql2all_spark.operators.ccnet import text_kn_ccnet_buckets
     from sql2all_spark.tables import load_table
 
     lang = {
@@ -2000,7 +2064,7 @@ def test_kn_ccnet_buckets_tile_the_scorer(spark, sf_dir):
         .collect()
     }
     per_lang = defaultdict(lambda: [0, 0, 0])
-    for r in kn3_doc_scores(spark, sf_dir).collect():
+    for r in kn_doc_scores(spark, sf_dir, 3).collect():
         a = per_lang[lang[r["doc_id"]]]
         a[0] += 1
         a[1] += r["n_trigrams"]

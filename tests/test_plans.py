@@ -1471,7 +1471,7 @@ def test_post_strip_keeper_struct_max_no_group_window(spark, sf_dir):
 def test_kn_ccnet_buckets_inherits_scorer_shape_one_lang_window(
     spark, sf_dir
 ):
-    """The KN-CCNet bucketing (r16) composes the kn3_core scorer
+    """The KN-CCNet bucketing (r16) composes the KN trigram scorer
     unchanged — packed-key exchanges only, >= 5 broadcast model joins,
     no cartesian — and adds exactly ONE window (the per-lang NTILE
     tercile); the lang join is slim (doc_id, lang), so no exchange
