@@ -7,10 +7,11 @@ the per-document budget numbers a packing/sampling stage consumes:
 word and piece counts, the long-word skip count, and the fixed-point
 pieces-per-word rate.
 
-Composition: the trained final costs come from ``sp_loop.trained_costs``
-(ONE definition of the loop — the report and the encode leg share it);
-the segmentation is the same Viterbi E-step frame over DISTINCT words
-(``sp_core.segment_words``), so each word encodes once no matter how
+Composition: the trained final costs come from
+``sp_unigram.trained_costs`` under ``SP_LOOP_SCHEDULE`` (ONE definition
+of the loop — the training report and the encode leg share it); the
+segmentation is the same Viterbi E-step frame over DISTINCT words
+(``sp_unigram.segment_words``), so each word encodes once no matter how
 often it occurs.  Per-word piece counts then meet the corpus through a
 plain (word -> n_pieces) join on the exploded document words — at toy
 SFs the word map auto-broadcasts, at 100 TB (word vocabularies are
@@ -42,14 +43,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql2all_spark.functions.sp_core import (
+from sql2all_spark.operators.sp_unigram import (
+    SP_LOOP_SCHEDULE,
     SP_WORD_MAX,
     _SEP,
+    _sp_chain,
     encode_np_dw_ctes,
     segment_words,
-)
-from sql2all_spark.operators.sp_loop import (
-    _sp_loop_chain,
     trained_costs,
 )
 from sql2all_spark.registry import register
@@ -57,13 +57,7 @@ from sql2all_spark.tables import load_table
 
 
 def _encode_oracle() -> str:
-    # the loop's WITH-chain composed STRUCTURALLY (ADVICE r15: the old
-    # rindex("SELECT ") slice of the assembled loop SQL would silently
-    # truncate at the wrong spot if the final projection ever gained a
-    # nested SELECT), then the encode-specific tail CTEs
-    chain, tag, _prev = _sp_loop_chain()
-    # np/dw moved to sp_core.encode_np_dw_ctes in r16 (shared with the
-    # sp_pack sequence-packing oracle); assembled text byte-identical
+    chain, tag, _prev = _sp_chain(SP_LOOP_SCHEDULE)
     return f"""
 WITH {chain},
 {encode_np_dw_ctes(tag)},
@@ -99,7 +93,9 @@ def encode_pieces(
     loop costs — the encode frame shared with the sequence-packing
     composition (``operators/sp_pack.py``) so the tokenize-then-count
     rule has ONE definition."""
-    words, _vc, _em, _em1, costs = trained_costs(spark, sf_dir)
+    words, _vc, _em, _em1, costs = trained_costs(
+        spark, sf_dir, SP_LOOP_SCHEDULE
+    )
     seg = segment_words(words, costs).select(
         "word",
         (F.size(F.split("seg", _SEP)) - F.lit(1)).cast("long").alias("np"),

@@ -15,9 +15,9 @@ boundary, and the integer fill rate (the last sequence is the only
 one under ``SP_PACK_LEN``).
 
 Composition (ONE definition each): per-doc piece counts are
-``sp_encode.encode_pieces``; the oracle prepends ``sp_loop``'s structural
-WITH-chain + ``sp_core.encode_np_dw_ctes`` (the sf1-cache-stable text
-sp_encode's own oracle composes).  Docs whose words were all skipped
+``sp_encode.encode_pieces``; the oracle prepends the training loop's
+WITH-chain (``sp_unigram._sp_chain``) + ``sp_unigram.encode_np_dw_ctes``
+(the text sp_encode's own oracle composes).  Docs whose words were all skipped
 (> SP_WORD_MAX chars) or empty still ship their EOS token — every
 document lands in exactly one run of the stream (encode's honest
 ``n_skipped`` semantics carry over: skipped words cost 0 pieces).
@@ -53,8 +53,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sql2all_spark.cache import persist_tracked
-from sql2all_spark.functions.sp_core import encode_np_dw_ctes
-from sql2all_spark.operators.sp_loop import _sp_loop_chain
+from sql2all_spark.operators.sp_unigram import (
+    SP_LOOP_SCHEDULE,
+    _sp_chain,
+    encode_np_dw_ctes,
+)
 from sql2all_spark.registry import register
 
 SP_PACK_LEN = 2048  # tokens per packed training sequence
@@ -62,7 +65,7 @@ SP_PACK_NPART = 32  # prefix-sum buckets (executor-count-sized at scale)
 
 
 def _pack_oracle() -> str:
-    chain, tag, _prev = _sp_loop_chain()
+    chain, tag, _prev = _sp_chain(SP_LOOP_SCHEDULE)
     return f"""
 WITH {chain},
 {encode_np_dw_ctes(tag)},

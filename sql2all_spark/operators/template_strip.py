@@ -53,7 +53,7 @@ def strip_chain_ctes() -> str:
     keeper -> strip positions -> reassembled ``cleaned`` docs) — shared
     with the post-strip dedup composition (``operators/strip_dedup.py``)
     so downstream oracles append their own tail instead of slicing the
-    assembled SQL (the sp_loop ADVICE-r15 lesson).  Callers open with
+    assembled SQL (as ``sp_unigram._sp_chain`` does).  Callers open with
     ``WITH RECURSIVE`` (the family closure needs it)."""
     return f"""{family_ctes()},
 runs AS (

@@ -66,7 +66,6 @@ _QUERY_MODULES = [
     "sql2all_spark.operators.sketches",
     "sql2all_spark.operators.skew",
     "sql2all_spark.operators.sp_encode",
-    "sql2all_spark.operators.sp_loop",
     "sql2all_spark.operators.sp_pack",
     "sql2all_spark.operators.sp_unigram",
     "sql2all_spark.operators.strip_dedup",

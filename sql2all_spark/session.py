@@ -111,10 +111,12 @@ DEFAULT_CONFS: dict[str, str] = {
     # 10k rows/Arrow batch keeps pandas-UDF peak memory bounded at wide rows
     # (binary/multimodal columns) while amortizing the Python call overhead.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-    # events.parquet stores ts as INT64 TIMESTAMP(NANOS), which Spark's
-    # parquet reader rejects outright; read it as raw long and convert to
-    # a microsecond timestamp in tables.load_table (integer div — doubles
-    # cannot hold ns-epoch magnitudes).
+    # An events.parquet may store ts as INT64 TIMESTAMP(NANOS) (the
+    # fixtures store MICROS), which Spark's parquet reader rejects
+    # outright; read NANOS as raw long and let
+    # tables.normalize_events_ts convert either encoding to a
+    # microsecond timestamp (integer div — doubles cannot hold ns-epoch
+    # magnitudes).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Parquet scans: vectorized reader is default-on; make pushdown explicit.
     "spark.sql.parquet.filterPushdown": "true",

@@ -113,10 +113,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
     if name == "events":
-        # events.ts is INT64 TIMESTAMP(NANOS), which the parquet reader
-        # rejects outright; the conf is runtime-settable, so set it here so
-        # every builder works even on a session we didn't configure (the
-        # driver hands us its own session in the queries() contract)
+        # events.ts may arrive as INT64 TIMESTAMP(NANOS) (the fixtures
+        # store MICROS; normalize_events_ts handles both), which the
+        # parquet reader rejects outright; the conf is runtime-settable,
+        # so set it here so every builder works even on a session we
+        # didn't configure (the driver hands us its own session in the
+        # queries() contract)
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:

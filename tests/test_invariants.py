@@ -1398,9 +1398,13 @@ def test_sp_train_loop_conserves_chars_shrinks_and_reenters_literally(
 
     from pyspark.sql import functions as F
 
-    from sql2all_spark.functions.sp_core import _em_round, _segment_em
-    from sql2all_spark.operators.sp_loop import SP_LOOP_SCHEDULE
-    from sql2all_spark.operators.sp_unigram import SP_TOP, SP_WORD_MAX
+    from sql2all_spark.operators.sp_unigram import (
+        SP_LOOP_SCHEDULE,
+        SP_TOP,
+        SP_WORD_MAX,
+        _em_round,
+        _segment_em,
+    )
     from sql2all_spark.plans import physical_plan
     from sql2all_spark.tables import load_table
 
@@ -1609,8 +1613,11 @@ def test_sp_encode_bridges_training_ledger_and_counts(spark, sf_dir):
     n_words / n_skipped match a raw recount of the fixture."""
     from collections import Counter
 
-    from sql2all_spark.functions.sp_core import SP_WORD_MAX
-    from sql2all_spark.operators.sp_loop import trained_costs
+    from sql2all_spark.operators.sp_unigram import (
+        SP_LOOP_SCHEDULE,
+        SP_WORD_MAX,
+        trained_costs,
+    )
     from sql2all_spark.tables import load_table
     from pyspark.sql import functions as F
 
@@ -1638,48 +1645,64 @@ def test_sp_encode_bridges_training_ledger_and_counts(spark, sf_dir):
         if n_enc:
             assert g["pieces_p1000"] == g["n_pieces"] * 1000 // n_enc
     # the cross-query bridge: encode totals == final EM ledger totals
-    _, _, em_final, _, _ = trained_costs(spark, sf_dir)
+    _, _, em_final, _, _ = trained_costs(spark, sf_dir, SP_LOOP_SCHEDULE)
     ledger_pieces = sum(r["em_count"] for r in em_final.collect())
     assert sum(g["n_pieces"] for g in rows.values()) == ledger_pieces
 
 
-def test_sp_trained_costs_session_store_cold_warm_identical(spark, sf_dir):
-    """The loop session store (ADVICE r15, the clf_core pattern): the
-    training query and the encode leg share one EM+prune run per
-    (session, corpus).  Pins (a) cold-vs-warm value identity for BOTH
-    consumers, (b) a warm BUILD launches ZERO Spark jobs (the
-    multi-round collects are gone; only deferred lineage remains), and
-    (c) path aliasing resolves to the same realpath-keyed entry."""
+@pytest.mark.parametrize(
+    "name",
+    ["text_sp_unigram_em", "text_sp_unigram_prune", "text_sp_unigram_train"],
+)
+def test_sp_trained_costs_session_store_cold_warm_identical(
+    spark, sf_dir, name
+):
+    """The trainer's session store (the clf_core pattern): every keep
+    schedule runs its EM+prune loop once per (session, corpus, schedule),
+    and the training loop's schedule is shared with the encode leg.
+    Pins, per report query, (a) cold-vs-warm value identity for the
+    report and its consumer (the encode leg for the training loop, the
+    report itself otherwise), (b) a warm BUILD launches ZERO Spark jobs
+    (the multi-round collects are gone; only deferred lineage remains),
+    and (c) path aliasing resolves to the same realpath-keyed entry."""
     import os
 
-    from sql2all_spark.operators import sp_loop
+    from sql2all_spark.operators import sp_unigram
     from sql2all_spark.operators.sp_encode import text_sp_encode
 
-    key = os.path.realpath(sf_dir)
-    sp_loop.clear_trained_cache()
-    cold = (
-        all_specs()["text_sp_unigram_train"].builder(spark, sf_dir).collect()
+    schedule = {
+        "text_sp_unigram_em": (),
+        "text_sp_unigram_prune": (sp_unigram.SP_KEEP,),
+        "text_sp_unigram_train": sp_unigram.SP_LOOP_SCHEDULE,
+    }[name]
+    consumer = (
+        text_sp_encode
+        if schedule == sp_unigram.SP_LOOP_SCHEDULE
+        else all_specs()[name].builder
     )
-    assert key in sp_loop._TRAINED_CACHE  # the miss seeded the store
-    costs_cold, em1_cold = sp_loop._TRAINED_CACHE[key]
+    key = (os.path.realpath(sf_dir), schedule)
+    sp_unigram.clear_trained_cache()
+    cold = all_specs()[name].builder(spark, sf_dir).collect()
+    assert key in sp_unigram._TRAINED_CACHE  # the miss seeded the store
+    costs_cold, em1_cold = sp_unigram._TRAINED_CACHE[key]
 
     # warm BUILD must launch no jobs (lazy word scan + literal costs)
     st = spark.sparkContext.statusTracker()
     before = set(st.getJobIdsForGroup())
-    df = all_specs()["text_sp_unigram_train"].builder(spark, sf_dir)
+    df = all_specs()[name].builder(spark, sf_dir)
     ran = len(set(st.getJobIdsForGroup()) - before)
     assert ran == 0, f"warm-store build launched {ran} loop jobs"
     assert df.collect() == cold  # values byte-identical, hit vs miss
 
-    # the encode leg consumes the SAME warm entry and stays identical
-    # to its own cold run (aliased path -> same realpath entry)
+    # the consumer reads the SAME warm entry and stays identical to its
+    # own cold run (aliased path -> same realpath entry)
     alias = sf_dir.rstrip("/") + "/."
-    enc_warm = text_sp_encode(spark, alias).collect()
-    assert (costs_cold, em1_cold) == sp_loop._TRAINED_CACHE[key]
-    sp_loop.clear_trained_cache()
-    enc_cold = text_sp_encode(spark, sf_dir).collect()
+    enc_warm = consumer(spark, alias).collect()
+    assert (costs_cold, em1_cold) == sp_unigram._TRAINED_CACHE[key]
+    sp_unigram.clear_trained_cache()
+    enc_cold = consumer(spark, sf_dir).collect()
     assert enc_cold == enc_warm
-    assert sp_loop._TRAINED_CACHE[key] == (costs_cold, em1_cold)
+    assert sp_unigram._TRAINED_CACHE[key] == (costs_cold, em1_cold)
 
 
 def test_template_strip_replicates_rewrite_and_reconciles_keeper(
