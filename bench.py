@@ -18,13 +18,14 @@ The printed line carries only the HEADLINE query subset so it stays well
 under the driver's output-tail buffer (BENCH_r01 recorded "parsed": null
 because the full 85-query line was longer than the captured tail); the
 complete map is written to bench_full.json alongside the repo, where
-``queries[timer]`` is the min wall over reps and ``runs[timer]`` holds one
-record per rep: ``wall_s``, the ``spark.*`` job record of the rep's own
-job group read from the in-process status store (jobs, stages, tasks, job
-time, driver gap, executor time, shuffle, spill, I/O; no Spark UI), and
-the ``storage_mb`` and ``persistent_rdds`` still held after the rep's
-``clearCache``.  One progress line per timer goes to stderr: min/median
-wall, jobs per rep and median driver gap.
+``startup`` holds the set-up split (``get_spark_s`` and the warm-up q1's
+``first_query_s``), ``queries[timer]`` is the min wall over reps and
+``runs[timer]`` holds one record per rep: ``wall_s``, the ``spark.*``
+job record of the rep's own job group read from the in-process status
+store (jobs, stages, tasks, job time, driver gap, executor time, shuffle,
+spill, I/O; no Spark UI), and the ``storage_mb`` and ``persistent_rdds``
+still held after the rep's ``clearCache``.  One progress line per timer
+goes to stderr: min/median wall, jobs per rep and median driver gap.
 
 Each query is forced to full materialization with the noop sink (executes
 the whole plan, writes nothing, no driver-side collect bottleneck), which
@@ -285,11 +286,14 @@ def main() -> None:
         ap.error("--reps must be at least 1")
 
     start_load1 = _load1()
+    t0 = time.perf_counter()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
+    t1 = time.perf_counter()
     # Warmup: absorb JVM startup + first-parquet-footer costs.
     _run(specs["q1_pricing_summary"].builder(spark, SF_DIR))
+    startup = {"get_spark_s": round(t1 - t0, 3),
+               "first_query_s": round(time.perf_counter() - t1, 3)}
 
     calib = _calibrate(spark)
 
@@ -318,7 +322,7 @@ def main() -> None:
         **calib,
     }
     with open(os.path.join(ROOT, "bench_full.json"), "w") as f:
-        json.dump({**full, "runs": runs}, f, indent=1)
+        json.dump({**full, "startup": startup, "runs": runs}, f, indent=1)
     compact = dict(full)
     compact["queries"] = {k: times[k] for k in HEADLINE if k in times}
     spark.stop()  # flush the JVM so no late log lines trail the JSON line

@@ -11,13 +11,21 @@ on a large multi-executor cluster:
 - Arrow enabled for every pandas-UDF exchange (the only Python hot paths we
   allow are Arrow-batched).
 - Session timezone pinned UTC so timestamp semantics match the DuckDB oracle.
+
+Start-up overlaps the JVM's first-use work (class loading, the first job,
+the first SQL plan) with the steps that build the session, on daemon
+threads; see :func:`get_spark`.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
+from pyspark import SparkConf, SparkContext
+from pyspark.java_gateway import launch_gateway
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 def _default_driver_mem() -> str:
     """Driver heap default, clamped to the host (ADVICE r7).
@@ -146,13 +154,87 @@ def cpu_count() -> int:
         return os.cpu_count() or 1
 
 
+# Job group of the start-up warm-ups: their jobs never join the ungrouped
+# set (``statusTracker().getJobIdsForGroup()``) that tests and bench.py
+# count.
+WARMUP_GROUP = "sql2all_spark.warmup"
+
+
+def _background(warm, *args) -> None:
+    """Run one best-effort warm-up on a daemon thread.  Nothing waits for
+    it, and every exception it raises is dropped — a ``spark.stop()``
+    that races it included."""
+
+    def run():
+        try:
+            warm(*args)
+        except Exception:
+            pass
+
+    threading.Thread(target=run, name="sql2all-spark-warmup", daemon=True).start()
+
+
+def _warm_reflection(jvm) -> None:
+    # Scala runtime reflection (~1k scala-reflect classes) is most of the
+    # SparkSession constructor's class loading.
+    getattr(getattr(jvm, "scala.reflect.runtime.package$"), "MODULE$").universe()
+
+
+def _warm_scheduler(sc: SparkContext) -> None:
+    # The JVM's first job: DAGScheduler, task serialisation, the executor
+    # threads and the result path; JVM-only, no Python worker.
+    sc.setJobGroup(WARMUP_GROUP, "start-up warm-up")
+    one = sc._jvm.java.util.ArrayList()
+    one.add(1)
+    sc._jsc.parallelize(one, 1).count()
+
+
+def _warm_sql(spark: SparkSession) -> None:
+    # The first SQL job: Catalyst, whole-stage codegen (Janino), an AQE
+    # shuffle exchange and the collect path.  Reads nothing, sets no conf.
+    spark.sparkContext.setJobGroup(WARMUP_GROUP, "start-up warm-up")
+    spark.range(0, 2, 1, 2).groupBy((F.col("id") % 2).alias("k")).agg(
+        F.sum("id")
+    ).collect()
+
+
+def _start_overlapped(options: dict[str, str]) -> SparkSession:
+    """Launch the JVM and build the session from ``options``, each step
+    beside a warm-up it does not depend on (see :func:`get_spark`)."""
+    conf = SparkConf().setAll(options.items())
+    gateway = launch_gateway(conf)
+    _background(_warm_reflection, gateway.jvm)
+    sc = SparkContext(conf=conf, gateway=gateway)
+    _background(_warm_scheduler, sc)
+    spark = SparkSession.builder.config(map=options).getOrCreate()  # reuses sc
+    _background(_warm_sql, spark)
+    return spark
+
+
 def get_spark(
     app_name: str = "sql2all_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session.  Idempotent per JVM."""
+    """Build (or fetch) the session.  Idempotent per JVM.
+
+    A call that launches the JVM overlaps its first-use work with the
+    start-up steps, on three best-effort daemon threads:
+
+    1. Scala runtime reflection initialises beside the ``SparkContext``
+       build (most of the ``SparkSession`` constructor's class loading);
+    2. a one-task JVM-only job warms the scheduler beside the
+       ``SparkSession`` constructor;
+    3. a tiny ``range`` aggregate warms Catalyst, codegen, the AQE
+       exchange and the collect path while the caller builds its first
+       plan.
+
+    The warm-up jobs run in job group ``WARMUP_GROUP``, so the ungrouped
+    job set stays exact; they read no file or table, set no conf, and
+    drop every exception, a racing ``spark.stop()`` included.  Nothing
+    waits for them.  A call that finds the JVM running (a reused session)
+    starts none, and neither does :func:`configure_existing`."""
     # Python workers unpickle pandas UDFs BY REFERENCE (cloudpickle keeps
     # module-level functions as module imports), so every worker must be
     # able to import sql2all_spark.  Launched from the repo root that
@@ -169,16 +251,17 @@ def get_spark(
         )
     cpus = cpu_count()
     resolved_master = master or f"local[{cpus}]"
-    builder = SparkSession.builder.appName(app_name).master(resolved_master)
-    confs = dict(DEFAULT_CONFS)
+    options = {"spark.app.name": app_name, "spark.master": resolved_master}
+    options.update(DEFAULT_CONFS)
     local_dir = _default_local_dir(resolved_master)
     if local_dir:
-        confs["spark.local.dir"] = local_dir
-    confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions or 2 * cpus)
-    confs.update(extra_confs or {})
-    for k, v in confs.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        options["spark.local.dir"] = local_dir
+    options["spark.sql.shuffle.partitions"] = str(shuffle_partitions or 2 * cpus)
+    options.update(extra_confs or {})
+    if SparkContext._gateway is None:
+        spark = _start_overlapped(options)
+    else:
+        spark = SparkSession.builder.config(map=options).getOrCreate()
     # Ensure oracle-critical session confs hold even on a reused session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark

@@ -1705,6 +1705,33 @@ def test_sp_trained_costs_session_store_cold_warm_identical(
     assert sp_unigram._TRAINED_CACHE[key] == (costs_cold, em1_cold)
 
 
+def test_sp_schedules_resume_from_stored_prefix(spark, sf_dir):
+    """A schedule resumes from its longest stored prefix: after ``em``, a
+    cold ``prune`` skips the seed chain, and a cold ``train`` after both
+    also skips round 1's EM collect.  Each gives the rows of a build from
+    an empty store, in fewer jobs."""
+    from sql2all_spark.operators import sp_unigram
+
+    st = spark.sparkContext.statusTracker()
+
+    def build(name):
+        spark.catalog.clearCache()  # each build re-scans the word table
+        before = set(st.getJobIdsForGroup())
+        rows = all_specs()[name].builder(spark, sf_dir).collect()
+        return rows, len(set(st.getJobIdsForGroup()) - before)
+
+    alone = {}
+    for name in ("text_sp_unigram_prune", "text_sp_unigram_train"):
+        sp_unigram.clear_trained_cache()
+        alone[name] = build(name)
+    sp_unigram.clear_trained_cache()
+    build("text_sp_unigram_em")
+    for name in ("text_sp_unigram_prune", "text_sp_unigram_train"):
+        rows, jobs = build(name)
+        assert rows == alone[name][0], name
+        assert jobs < alone[name][1], (name, jobs, alone[name][1])
+
+
 def test_template_strip_replicates_rewrite_and_reconciles_keeper(
     spark, sf_dir
 ):
