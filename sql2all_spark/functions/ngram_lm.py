@@ -76,6 +76,10 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda t: t != F.lit(""))
 
 
+# :func:`tokens` as a DuckDB list over the ``text`` column
+TOKENS_SQL = "list_filter(string_split(text, ' '), t -> t <> '')"
+
+
 def top_k(df: DataFrame, k: int, count: str, *keys: str) -> DataFrame:
     """Bounded serving table: ORDER BY count DESC NULLS LAST, keys ASC
     NULLS FIRST LIMIT k (a TakeOrderedAndProject heap)."""
@@ -305,10 +309,10 @@ def kn_chain_ctes() -> str:
     th = f"{base_hash_sql('t')} % {b1}"
     return f"""d AS (
   SELECT doc_id,
-         list_transform(list_filter(string_split(text, ' '), t -> t <> ''),
+         list_transform({TOKENS_SQL},
                         t -> {th}) AS th
   FROM documents
-  WHERE len(list_filter(string_split(text, ' '), t -> t <> '')) >= 3
+  WHERE len({TOKENS_SQL}) >= 3
 ),
 pr AS (
   SELECT doc_id, th[i - 2] * {b2} + th[i - 1] * {b1} + th[i] AS tg

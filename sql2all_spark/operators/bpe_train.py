@@ -51,12 +51,29 @@ from collections import Counter
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from sql2all_spark.cache import checkpoint_tracked
 from sql2all_spark.registry import register
 from sql2all_spark.tables import load_table
 
 BPE_TRAIN_ROUNDS = 10
+
+
+def _arrow_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType
+) -> DataFrame:
+    """Driver rows → frame through one pyarrow Table with exactly
+    ``schema`` (nullable flags included).  The JVM decodes the Arrow
+    batches into a ``LocalTableScan`` that keeps the row order; no
+    Python worker runs, unlike a frame of pickled rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    arrays = [pa.array(c, f.type) for c, f in zip(cols, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def _adjacent_pairs(syms: Column) -> Column:
@@ -175,7 +192,7 @@ def _train_vocab(
     local = collect_if_bounded(cur)
     if local is not None:
         rules, final = _train_local([(r.c, r.syms) for r in local], rounds)
-        return rules, cur.sparkSession.createDataFrame(final, cur.schema)
+        return rules, _arrow_frame(cur.sparkSession, final, cur.schema)
     rules: list[tuple] = []
     # Loop shuffles sized from the materialized vocab count, AQE off for
     # tiny frames (looputil) — each mining round is one pair-explode +
@@ -259,9 +276,7 @@ ORDER BY rank ASC NULLS FIRST
 )
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules, _final_vocab = train_bpe(spark, sf_dir)
-    # rules are built in rank order and a local relation keeps its row
-    # order, so no sort (sorting ten rows cost three Spark jobs)
-    return spark.createDataFrame(
-        rules, "rank long, sym_a string, sym_b string, merged string,"
-        " pair_count long"
-    )
+    # rules are built in rank order and the Arrow-built LocalTableScan
+    # keeps its row order, so no sort (sorting ten rows cost three jobs)
+    schema = "rank long, sym_a string, sym_b string, merged string, pair_count long"
+    return _arrow_frame(spark, rules, StructType.fromDDL(schema))

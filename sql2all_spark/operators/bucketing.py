@@ -89,15 +89,20 @@ def write_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     # the slots the first one's tail leaves idle (guide §2.6 "overlap
     # independent jobs"); each write occupies at most N_BUCKETS slots of
     # a wider session.  Values untouched: disjoint outputs, same plans.
+    # inheritable_thread_target hands each thread the caller's local
+    # properties and job tags, so both writes run in the caller's group.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
         fo = pool.submit(
-            _write, t_orders, "orders",
+            inherit(_write), t_orders, "orders",
             ["o_orderkey", "o_orderstatus"], "o_orderkey",
         )
         fl = pool.submit(
-            _write, t_lineitem, "lineitem",
+            inherit(_write), t_lineitem, "lineitem",
             ["l_orderkey", "l_extendedprice", "l_discount"], "l_orderkey",
         )
         fo.result()

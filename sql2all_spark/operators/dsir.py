@@ -56,7 +56,7 @@ from sql2all_spark.operators.text import (  # noqa: E402
     LANG_MARKERS,
     _marker_hits,
     _marker_hits_sql,
-    _tokens,
+    _split_words,
 )
 
 DSIR_K = 100  # resample size
@@ -151,7 +151,7 @@ def text_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sql2all_spark.functions.ngram_lm import unigram_doc_scores
 
-    toks = _tokens(F.col("text"))
+    toks = _split_words(F.col("text"))
     n_chars = F.length("text")
     n_tokens = F.size(toks)
     trigrams = F.transform(

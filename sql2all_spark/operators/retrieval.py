@@ -14,17 +14,13 @@ literal 2.2) so the scores agree bit-for-bit before rounding.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql2all_spark.functions.bm25 import bm25_scored_sql, bm25_scores
+from sql2all_spark.operators.text import _split_words
 from sql2all_spark.registry import register
 from sql2all_spark.tables import load_table
-
-
-def _tokens(text: Column) -> Column:
-    # Same whitespace tokenization as text.py's _tokens.
-    return F.split(text, " ")
 
 
 BM25_TOP_K = 10
@@ -102,7 +98,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     tf = (
-        d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
+        d.select("doc_id", F.explode(_split_words(F.col("text"))).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )

@@ -18,8 +18,10 @@ from pyspark.sql import functions as F
 
 from sql2all_spark.functions.hashing import base_hash_sql
 from sql2all_spark.functions.ngram_lm import (
+    TOKENS_SQL,
     UNIGRAM_ORACLE,
     VOCAB,
+    tokens as _tokens,
     unigram_doc_scores,
 )
 from sql2all_spark.cache import materialize_tracked, persist_tracked
@@ -39,7 +41,10 @@ LANG_MARKERS: dict[str, list[str]] = {
 ENGLISH_STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 
 
-def _tokens(text: Column) -> Column:
+def _split_words(text: Column) -> Column:
+    """Bare split on ' ': a whitespace run yields '' tokens.  The operators
+    that still use it have oracles that split the same way; the others
+    tokenize with the n-gram LM core's rule (``_tokens``: drop '')."""
     return F.split(text, " ")
 
 
@@ -51,9 +56,7 @@ def _marker_hits(tokens: Column, markers: list[str]) -> Column:
 
 def _marker_hits_sql(markers: list[str]) -> str:
     lit = "[" + ",".join(f"'{m}'" for m in markers) + "]"
-    return (
-        f"len(list_filter(string_split(text, ' '), t -> list_contains({lit}, t)))"
-    )
+    return f"len(list_filter({TOKENS_SQL}, t -> list_contains({lit}, t)))"
 
 
 @register(
@@ -112,14 +115,14 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT doc_id,
        LENGTH(text) AS n_chars_actual,
-       len(string_split(text, ' ')) AS n_tokens,
+       len({TOKENS_SQL}) AS n_tokens,
        CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[^a-zA-Z ]', '', 'g')) AS DOUBLE)
          / LENGTH(text) AS punct_ratio,
        CAST({_marker_hits_sql(ENGLISH_STOPWORDS)} AS DOUBLE)
-         / len(string_split(text, ' ')) AS stopword_ratio,
+         / len({TOKENS_SQL}) AS stopword_ratio,
        CAST(LENGTH(regexp_replace(text, '[^ ]', '', 'g')) + 1 AS DOUBLE) AS approx_words,
        CASE WHEN LENGTH(text) BETWEEN 100 AND 20000
-             AND len(string_split(text, ' ')) >= 10
+             AND len({TOKENS_SQL}) >= 10
             THEN 1 ELSE 0 END AS passes_length_gate
 FROM documents
 """,
@@ -155,9 +158,9 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_token_count",
-    oracle="""
+    oracle=f"""
 SELECT doc_id,
-       len(string_split(text, ' ')) AS ws_tokens,
+       len({TOKENS_SQL}) AS ws_tokens,
        len(regexp_extract_all(text, '[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]')) AS bpe_ish_tokens,
        len(regexp_extract_all(text, '[a-zA-Z]+')) AS word_tokens,
        CAST(LENGTH(text) AS DOUBLE) / len(regexp_extract_all(text, '[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]'))
@@ -284,9 +287,7 @@ LIMIT 25
 )
 def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.explode(_tokens(F.col("text"))).alias("token")).filter(
-        F.col("token") != ""
-    )
+    toks = d.select(F.explode(_tokens(F.col("text"))).alias("token"))
     return (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -303,7 +304,7 @@ CHUNK_STRIDE = 30  # 10-token overlap between consecutive chunks
     "text_chunk_windows",
     oracle=f"""
 WITH d AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS w FROM documents
 ),
 s AS (
   SELECT doc_id, w,
@@ -358,10 +359,10 @@ PACK_CAP = 256  # context-window budget in tokens
     "text_pack_sequences",
     oracle=f"""
 WITH RECURSIVE d AS (
-  SELECT lang, doc_id, len(string_split(text, ' ')) AS n_tok,
+  SELECT lang, doc_id, len({TOKENS_SQL}) AS n_tok,
          ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
   FROM documents
-  WHERE len(string_split(text, ' ')) <= {PACK_CAP}
+  WHERE len({TOKENS_SQL}) <= {PACK_CAP}
 ),
 walk AS (
   SELECT lang, rn, doc_id, n_tok,
@@ -453,7 +454,7 @@ FROM g
 )
 def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    w = d.select("doc_id", _tokens(F.col("text")).alias("w")).filter(
+    w = d.select("doc_id", _split_words(F.col("text")).alias("w")).filter(
         F.size("w") >= 3
     )
     grams = F.transform(
@@ -543,7 +544,7 @@ def text_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sql2all_spark.functions.hashing import base_hash
 
     d = load_table(spark, sf_dir, "documents")
-    w = d.select("doc_id", _tokens(F.col("text")).alias("w")).filter(
+    w = d.select("doc_id", _split_words(F.col("text")).alias("w")).filter(
         F.size("w") >= CONTAM_GRAM
     )
     # token hashes MATERIALIZED as a real column (the _shingles inlining
@@ -633,7 +634,7 @@ def dup_gram_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice, at the head of every consumer); no-op on multi-split
     # layouts.  Downstream is all integer/hash math.
     w = spread_fanout(d.select("doc_id", "text")).select(
-        "doc_id", _tokens(F.col("text")).alias("w")
+        "doc_id", _split_words(F.col("text")).alias("w")
     ).filter(F.size("w") >= n)
     pos = F.explode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias("pos")
     p = w.select("doc_id", "w", pos)
@@ -774,7 +775,7 @@ LIMIT {PMI_TOP}
 )
 def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens(F.col("text")).alias("w")
+        "doc_id", _split_words(F.col("text")).alias("w")
     )
     tot = d.agg(
         F.sum(F.size("w")).cast("double").alias("t"),
@@ -893,7 +894,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k, w = WINNOW_K, WINNOW_W
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens(F.col("text")).alias("w")
+        "doc_id", _split_words(F.col("text")).alias("w")
     ).filter(F.size("w") >= k + w - 1)
     # Materialize gram hashes as a REAL column: Catalyst inlines cheap
     # lambda-built expressions into every use site (NOTES.md), and the

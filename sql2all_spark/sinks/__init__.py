@@ -8,6 +8,12 @@ ORC/Avro (``README.md:26-31``).  We implement all of them, distributed and
 committer-finalized — the reference's single writer task has a drop-the-tail
 race (``while !rx.is_closed()`` at ``lib.rs:106,117,130``) that Spark's
 commit protocol makes impossible.
+
+Parquet, CSV, JSON, ORC and Avro are Spark's own data sources: Spark's save
+modes and options, one output directory each.  Avro goes by class name
+(``AVRO_FORMAT``; Spark 4.1 ships it in ``spark-sql`` but registers the
+short name ``avro`` only with ``spark-avro``, and older Spark without that
+package raises its own "failed to find data source" error).
 """
 
 from __future__ import annotations
@@ -16,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SUPPORTED = ("parquet", "csv", "json", "ndjson", "orc", "avro", "arrow", "lance")
+# Spark's Avro data source by class name; ``sources`` reads through it too
+AVRO_FORMAT = "org.apache.spark.sql.avro.AvroFileFormat"
 
 
 def format_from_extension(output: str) -> str:
@@ -133,41 +141,18 @@ def write_output(
         return output
     for k, v in options.items():
         writer = writer.option(k, v)
-    try:
-        writer.format(fmt).save(output)
-    except Exception as e:
-        if fmt == "avro" and "Failed to find data source" in str(e):
-            # spark-avro is an external jar; without it, fall back to the
-            # self-contained driver-side container-file writer (same
-            # interchange-only contract as the arrow path above)
-            from sql2all_spark.sinks.avro_io import write_avro
-
-            if options:
-                raise ValueError(
-                    "driver-side avro fallback does not accept writer "
-                    f"options: {sorted(options)} (deploy spark-avro for "
-                    "the distributed writer)"
-                ) from e
-            if partition_by:
-                raise ValueError(
-                    "partition_by for avro needs the spark-avro package "
-                    "(distributed writer)"
-                ) from e
-            if not _claim_output(output, mode, fmt):
-                return output
-            return write_avro(out, output)
-        raise
+    writer.format(AVRO_FORMAT if fmt == "avro" else fmt).save(output)
     return output
 
 
 def _claim_output(output: str, mode: str, fmt: str, clear: bool = True) -> bool:
-    """Save-mode policy for the writers Spark does not manage (arrow, lance,
-    the driver-side avro fallback).  Returns False when ``mode='ignore'``
-    finds ``output`` already there.  ``append`` is rejected (no meaning for
-    a single IPC/avro file or a driver-side lance write), ``error`` /
-    ``errorifexists`` raise on an existing path, and ``overwrite`` removes
-    an existing file or directory first — whichever layout the previous
-    write left — unless ``clear=False``."""
+    """Save-mode policy for the writers Spark does not manage (arrow,
+    lance).  Returns False when ``mode='ignore'`` finds ``output`` already
+    there.  ``append`` is rejected (no meaning for a single IPC file or a
+    driver-side lance write), ``error`` / ``errorifexists`` raise on an
+    existing path, and ``overwrite`` removes an existing file or directory
+    first — whichever layout the previous write left — unless
+    ``clear=False``."""
     import os
     import shutil
 

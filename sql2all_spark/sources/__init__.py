@@ -7,6 +7,9 @@ keeps the pushdown: JDBC sources get the query via ``option("query", sql)``
 so the remote engine still does the work and Spark parallelizes the fetch;
 file sources register the data as a temp view and run the SQL in Spark
 itself (native execution — the part the reference never had).
+
+Avro goes through Spark's own format (``sinks.AVRO_FORMAT``), so an Avro
+path may be one container file or a Spark output directory.
 """
 
 from __future__ import annotations
@@ -14,6 +17,8 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from sql2all_spark.sinks import AVRO_FORMAT
 
 SourceReader = Callable[..., DataFrame]
 
@@ -30,7 +35,7 @@ _FILE_SCHEMES = {
     "json": "json",
     "orc": "orc",
     "arrow": "arrow",
-    "avro": "avro",
+    "avro": AVRO_FORMAT,  # Spark's Avro source; see ``sinks``
     "file": None,  # format from extension
 }
 
@@ -173,20 +178,6 @@ def read_file_sql(
             with ipc.open_file(path) as r:
                 tbl = r.read_all()
         df = spark.createDataFrame(tbl)
-        df.createOrReplaceTempView(table)
-        return spark.sql(query)
-    if fmt == "avro":
-        # source twin of the avro sink: distributed spark-avro reader when
-        # the jar is deployed, else the self-contained container-file
-        # reader (driver-side interchange, like the arrow path above)
-        try:
-            df = spark.read.format("avro").load(path)
-        except Exception as e:
-            if "Failed to find data source" not in str(e):
-                raise
-            from sql2all_spark.sinks.avro_io import read_avro
-
-            df = read_avro(spark, path)
         df.createOrReplaceTempView(table)
         return spark.sql(query)
     reader = spark.read

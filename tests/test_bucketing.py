@@ -85,3 +85,22 @@ def test_bucketed_join_matches_plain_join(spark, sf_dir, bucketed):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_bucketed_writes_run_in_callers_job_group(spark, sf_dir):
+    """The two bucketed writes run on pool threads; every job they start
+    must carry the caller's job group, so ``cancelJobGroup`` reaches them
+    and per-group job counts see them."""
+    from sql2all_spark.operators.bucketing import write_bucketed_tables
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test.bucketed_build"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "bucketed build")
+    try:
+        write_bucketed_tables(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped

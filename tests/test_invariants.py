@@ -489,6 +489,28 @@ def test_exact_substring_spans_are_verbatim_and_maximal(spark, sf_dir):
             )
 
 
+def test_bpe_train_arrow_frames_keep_schema_and_order(spark, sf_dir):
+    """text_bpe_train's rules frame and the local path's final vocab cross
+    into Spark as Arrow tables with the exact schema they had as row
+    frames (nullable flags included), keep the rules' rank order and run
+    no Python worker (a JVM LocalTableScan, not a scan of pickled rows)."""
+    from pyspark.sql.types import StructType
+
+    from sql2all_spark.operators.bpe_train import _initial_vocab, train_bpe
+    from sql2all_spark.registry import all_specs
+
+    rules, final_vocab = train_bpe(spark, sf_dir)
+    assert final_vocab.schema == _initial_vocab(spark, sf_dir).schema
+    df = all_specs()["text_bpe_train"].builder(spark, sf_dir)
+    assert df.schema == StructType.fromDDL(
+        "rank long, sym_a string, sym_b string, merged string, pair_count long"
+    )
+    assert [tuple(r) for r in df.collect()] == rules
+    for frame in (df, final_vocab):
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_bpe_train_rules_consistent_with_encoder_fold(spark, sf_dir):
     """Folding the TRAINED merge table through the encoder's pass
     machinery (tokenize._bpe_pass_col) must reproduce the training

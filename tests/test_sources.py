@@ -244,8 +244,8 @@ def test_export_option_split_read_vs_write(spark, tmp_path):
 
 
 def test_avro_source_roundtrip(spark, tmp_path):
-    """avro:// source twin of the avro sink: write via the container-file
-    writer, read back through read_source with SQL running on the result."""
+    """avro:// source twin of the avro sink: write through Spark's Avro
+    format, read back through read_source with SQL running on the result."""
     src = spark.createDataFrame(
         [(1, "a", 2.5), (2, "b", None), (3, None, 0.5)],
         "id long, name string, score double",
